@@ -105,37 +105,14 @@ class Config:
     salt_buckets: int = 8  # salt fan-out for host-skew mitigation
     bloom_capacity: int = 1_000_000  # expected seen-set size per bloom epoch
     bloom_fpp: float = 0.01
-    # seen-set prefilter backend (north rule: "bloom/cuckoo URL-seen").
-    # 'bloom': fixed-size OR-mergeable bitmap (default). 'cuckoo': 4-slot
-    # 16-bit-fingerprint cuckoo filter — supports DELETES (re-crawl
-    # eviction) and 2-probe lookups; degrades to route-everything-exact
-    # (never false-drops) if it saturates. Both are routing-only: a miss
-    # skips the anti-join, a hit takes the exact path, so crawl output is
-    # byte-identical across backends (test-pinned).
-    seen_filter: str = "bloom"
-    # fetch join strategy: 'auto' broadcasts the round batch into the pages
-    # scan only while it fits (<= fetch_broadcast_limit rows), else falls
-    # back to a shuffle-hash join (batch side builds) — a 10^8-row batch
-    # must never be broadcast; 'broadcast'/'shuffle' force a mode.
-    fetch_join: str = "auto"
+    # the fetch joins broadcast their small side (the round batch, or the
+    # image candidates) only while it has at most this many rows; a larger
+    # side builds a shuffle-hash join — a 10^8-row batch must never be
+    # broadcast
     fetch_broadcast_limit: int = 1_000_000
     # fold the adds-only frontier (physically drop visited rows) once the
     # delta chain grows past this many files — amortized O(live) rewrite
     frontier_fold_deltas: int = 16
-    # > 0 stores the frontier as a host-bucketed Spark table (CLUSTERED BY
-    # host SORTED BY host, priority): the politeness rank then runs with NO
-    # shuffle Exchange — the scan reports hash-partitioning on host. The
-    # scale path for 10^10-row frontiers; 0 keeps the plain delta-chain
-    # layout (any Spark session, no session-catalog tables).
-    frontier_buckets: int = 0
-    # auto-migration to the bucketed layout: when frontier_buckets == 0 and
-    # the driver's frontier-size estimate crosses the threshold mid-crawl,
-    # the engine folds the delta-chain frontier into a host-bucketed table
-    # (frontier_auto_buckets buckets) and stays there — small crawls never
-    # pay the session-catalog table cost, big ones get the shuffle-free
-    # politeness rank without opting in. 0 disables auto-migration.
-    frontier_auto_buckets: int = 64
-    frontier_auto_bucket_threshold: int = 1_000_000
     # Arrow batch rows for the pandas-UDF stages. html blobs are multi-KB,
     # so Spark's default 10k-row batches balloon to 100+ MB of Python-side
     # objects per concurrent worker; with 32 workers the extract stage
@@ -146,20 +123,10 @@ class Config:
     def __post_init__(self) -> None:
         if not self.seeds:
             self.seeds = [self.starting_url]
-        if self.fetch_join not in ("auto", "broadcast", "shuffle"):
-            raise ValueError(
-                f"fetch_join must be one of auto/broadcast/shuffle, "
-                f"got {self.fetch_join!r}"
-            )
         if self.scheduling not in ("dfs-parity", "throughput"):
             raise ValueError(
                 f"scheduling must be one of dfs-parity/throughput, "
                 f"got {self.scheduling!r}"
-            )
-        if self.seen_filter not in ("bloom", "cuckoo"):
-            raise ValueError(
-                f"seen_filter must be one of bloom/cuckoo, "
-                f"got {self.seen_filter!r}"
             )
 
     @classmethod

@@ -5,11 +5,10 @@ Each round is the distributed form of one reference recursion layer
 
   frontier --select_batch--> visit batch (politeness rank + cap trim, F6)
     -> visited_ops 'visit' rows (MERGE-equivalent upsert log, S6)
-    -> fetch-simulation join against the pages table (J1): small batches
-       broadcast INTO the pages scan (the 100-TB side streams, never
-       shuffles); batches past cfg.fetch_broadcast_limit switch to a
-       shuffle-hash join with the batch as build side; misses are fetch
-       failures (Q4)
+    -> fetch-simulation join against the pages table (J1): a batch of at
+       most cfg.fetch_broadcast_limit rows broadcasts INTO the pages scan
+       (the 100-TB side streams, never shuffles); a larger one is the
+       build side of a shuffle-hash join; misses are fetch failures (Q4)
     -> extract_links UDF -> posexplode (E2/E3) -> fused resolve/validate/
        canonicalize/sha1 UDF (C1/C2/F1-F4)
     -> first-observer dedup (U1/U2) -> bloom + anti-join seen filter (J2)
@@ -29,9 +28,8 @@ Scale design notes (10^10 frontier):
   over only the rounds since the last fold) and physically dropped by the
   periodic fold — never an O(frontier) rewrite inside a round;
 - the per-round O(frontier) that remains is the scheduling SCAN
-  (per-host politeness rank needs every host's minimum); on a real cluster
-  the frontier table would be bucketed by host so that rank is
-  shuffle-free — the read itself is irreducible for global scheduling;
+  (per-host politeness rank needs every host's minimum) — the read itself
+  is irreducible for global scheduling;
 - the cap trim is a range-partitioned exact top-k (per-partition counts +
   boundary-partition rank), never a single-partition global sort;
 - work stages repartition by url_sha1 (uniform) so mega-host batches spread
@@ -59,7 +57,7 @@ from pyspark.sql import functions as F
 from crabspark import frontier as frontier_mod
 from crabspark import udfs, urlkit
 from crabspark.config import Config
-from crabspark.seen import filter_unseen, load_seen_filter, make_seen_filter
+from crabspark.seen import Bloom, filter_unseen
 from crabspark.tables import Catalog
 
 FRONTIER_SCHEMA = (
@@ -112,26 +110,20 @@ class Engine:
             )
             workdir = self._ephemeral_root
         self.catalog = Catalog(workdir, spark)
-        # host-bucketed frontier layout (cfg.frontier_buckets > 0): the
-        # politeness rank runs shuffle-free over the bucketed scan
-        self.bucketed_frontier = None
-        if cfg.frontier_buckets:
-            from crabspark.tables import BucketedFrontier
-
-            self.bucketed_frontier = BucketedFrontier(
-                self.catalog, cfg.frontier_buckets
+        # an earlier build could keep the live frontier in a host-bucketed
+        # table: auto-migrated stores carry the 'frontier_bucketed_n' extra,
+        # stores created bucketed only the frontier_bucketed/ directory.
+        # Resuming either on the delta chain would silently crawl from an
+        # empty frontier.
+        if self.catalog.extra("frontier_bucketed_n") or os.path.isdir(
+            os.path.join(self.catalog.root, "frontier_bucketed")
+        ):
+            raise RuntimeError(
+                f"workdir {self.catalog.root} keeps its frontier in the "
+                f"removed host-bucketed layout (manifest extra "
+                f"'frontier_bucketed_n' or frontier_bucketed/); re-crawl "
+                f"into a fresh workdir"
             )
-        else:
-            # a previous run may have auto-migrated this store to the
-            # bucketed layout (frontier size crossed the threshold); the
-            # committed extra — not the config — is the source of truth
-            nb = self.catalog.extra("frontier_bucketed_n")
-            if nb:
-                from crabspark.tables import BucketedFrontier
-
-                self.bucketed_frontier = BucketedFrontier(
-                    self.catalog, int(nb)
-                )
         self.pages = spark.read.parquet(pages_path)
         # url-hash-bucketed pages layout (tables.bucketize_pages): the
         # fetch join prunes the scan to the batch's bucket partitions
@@ -182,18 +174,13 @@ class Engine:
         # driver-side frontier-size estimate (None = unknown -> always trim)
         fs = self.catalog.extra("frontier_size")
         self.frontier_size = int(fs) if fs is not None else None
-        # consecutive pre-select folds skipped because the live frontier
-        # was drain-sized (see _round); in-memory only — a resume starts
-        # at 0 and simply folds one round earlier than strictly needed
-        self._fold_skips = 0
-        self.fold_skips_total = 0  # observability (tests/metrics)
         bloom_path = self.catalog.extra("bloom")
         if bloom_path and os.path.exists(bloom_path) and not fresh_seen:
-            # sniffs bloom vs cuckoo from the snapshot itself (resume-proof
-            # against a seen_filter config change)
-            self.bloom = load_seen_filter(bloom_path, cfg)
+            self.bloom = Bloom.load(
+                bloom_path, cfg.bloom_capacity, cfg.bloom_fpp
+            )
         else:
-            self.bloom = make_seen_filter(cfg)
+            self.bloom = Bloom(cfg.bloom_capacity, cfg.bloom_fpp)
         if fresh_seen and self.catalog.committed_round >= 0:
             # reference process restart: seen set was in-memory and is lost;
             # visited/is_complete persists and gates re-crawl (Q5).
@@ -207,8 +194,7 @@ class Engine:
                 self.round - 1,
                 {"total_visited": 0, "frontier_size": self.frontier_size,
                  "queued_seeds": sorted(self._queued_seeds),
-                 "frontier_folded_round": self.round - 1,
-                 "frontier_seeded": True, "visited_at_fold": 0},
+                 "frontier_folded_round": self.round - 1},
             )
 
     # ------------------------------------------------------------------
@@ -318,10 +304,7 @@ class Engine:
                 )
             )
         seeds_df = self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
-        if self.bucketed_frontier is not None:
-            self.bucketed_frontier.replace(seeds_df, self.round - 1)
-        else:
-            self.catalog.overwrite("frontier", seeds_df, self.round)
+        self.catalog.overwrite("frontier", seeds_df, self.round)
         self.frontier_size = len(rows)
         self._queued_seeds = set(seen_canons)
 
@@ -331,32 +314,17 @@ class Engine:
         the whole-crawl timeout elapses (the reference's watchdog,
         src/main.rs:82-98 — except we stop cleanly at a round boundary
         with everything committed, instead of dropping the thread)."""
-        # Bucketed existence must come from COMMITTED manifest state, not
-        # raw directory contents: a crash between the seed replace() and the
-        # init commit leaves physical seed files with no committed extras —
-        # dir-based exists() would skip re-init and resume half-initialized
-        # (ADVICE r3). replace() is idempotent, so re-seeding is safe.
-        # A committed streaming ingest ALSO counts as evidence (an
-        # ingest-first store holds real committed roots that a re-seed
-        # replace() would wipe — matching the delta-chain path, where an
-        # ingest delta makes exists() true and config seeds stay unqueued).
-        frontier_exists = (
-            (self.bucketed_frontier.exists()
-             and (bool(self.catalog.extra("frontier_seeded", False))
-                  or int(self.catalog.extra("ingested_candidates_batch", -1))
-                  >= 0))
-            if self.bucketed_frontier is not None
-            else self.catalog.exists("frontier")
-        )
-        if not frontier_exists:
+        # existence comes from the COMMITTED manifest: a crash between the
+        # seed write and the init commit leaves only an unreferenced delta,
+        # so the next run seeds again. A committed streaming ingest counts:
+        # its roots are kept and the config seeds stay unqueued.
+        if not self.catalog.exists("frontier"):
             self._init_frontier()
             self.catalog.commit(
                 self.round - 1,
                 {"total_visited": self.total_visited,
                  "frontier_size": self.frontier_size,
-                 "queued_seeds": sorted(self._queued_seeds),
-                 "frontier_seeded": True,
-                 "visited_at_fold": self.total_visited},
+                 "queued_seeds": sorted(self._queued_seeds)},
             )
         started = time.monotonic()
         rounds_done = 0
@@ -400,36 +368,6 @@ class Engine:
             self._debug_log(f"round {r}: frontier empty (driver estimate)")
             return False
         jobs0 = self._job_counter()
-        # Bucketed layout: the live-mask side (visits since the last fold)
-        # must stay broadcast-small. When the accumulated visit count since
-        # the fold outgrows the broadcast limit, fold NOW (physically apply
-        # the visits) instead of force-broadcasting an unbounded side — at
-        # 10^10-frontier scale a fold-period of large batches would blow the
-        # driver/broadcast limit and fail the round (ADVICE r3).
-        if self.bucketed_frontier is not None:
-            bound = self._visits_since_fold()
-            if bound is None or bound > self.cfg.fetch_broadcast_limit:
-                # The fold's dominant cost is the O(live+adds) bucketed
-                # REWRITE; the liveness anti-join it would save runs inside
-                # _live_frontier either way (as a shuffle instead of a
-                # broadcast once the mask is oversized). On a drain-sized
-                # frontier — the tail rounds after the crawl's biggest
-                # batch — the rewrite is pure overhead: pay one cheap
-                # shuffled rank instead and skip the fold. Consecutive
-                # skips are capped so a long small-frontier tail cannot
-                # grow the mask join unboundedly (each skipped round
-                # re-scans all visits since the last fold).
-                small_live = (
-                    self.frontier_size is not None
-                    and self.frontier_size
-                    <= self.cfg.fetch_broadcast_limit // 4
-                )
-                if small_live and self._fold_skips < 2:
-                    self._fold_skips += 1
-                    self.fold_skips_total += 1
-                else:
-                    self._fold_frontier(r - 1)
-                    self._fold_skips = 0
         ops = self.catalog.read("visited_ops")
         frontier = self._live_frontier(ops)
         if frontier is None:
@@ -466,14 +404,10 @@ class Engine:
                     )
                 ).alias("visited_seeds")
             )
-        # under the host-bucketed layout, same-host rows are already
-        # co-located: the salt pre-rank would only reintroduce the shuffle
-        # the bucketing removed, so the quota rank runs directly
-        salt = 1 if self.bucketed_frontier is not None else cfg.salt_buckets
         batch = (
             frontier_mod.select_batch(
                 frontier, trim, cfg.scheduling, cfg.per_host_quota,
-                salt,
+                cfg.salt_buckets,
             )
             .observe(batch_obs, *obs_exprs)
             .localCheckpoint()
@@ -510,16 +444,7 @@ class Engine:
         # as build side — a 10^8-row round batch must never be broadcast.
         # The fused page UDF then moves each html binary across Arrow
         # exactly once, and only text/links survive ---
-        join_mode = cfg.fetch_join
-        if join_mode == "auto":
-            join_mode = (
-                "broadcast" if batch_n <= cfg.fetch_broadcast_limit
-                else "shuffle"
-            )
-        small_side = (
-            F.broadcast if join_mode == "broadcast"
-            else (lambda d: d.hint("shuffle_hash"))
-        )
+        small_side = self._small_side(batch_n)
         # SPJ-style bucket pruning: with a url-bucketed pages layout, scan
         # only the partitions the batch can hit (<= n_buckets ids, observed
         # for free on the batch-checkpoint job — O(buckets) driver state,
@@ -828,28 +753,19 @@ class Engine:
             else:
                 # presence-in-pages fallback mirrors the fetch join: prune
                 # the pages scan to the image candidates' buckets (ids rode
-                # the stats job) and size the join mode from the IMAGE
-                # candidate count, not the batch count
+                # the stats job) and size the join from the IMAGE candidate
+                # count, not the batch count
                 img_pages = self.pages
                 if img_bids is not None:
                     img_pages = img_pages.filter(
                         F.col("bucket").isin(img_bids)
                     )
-                img_join_mode = cfg.fetch_join
-                if img_join_mode == "auto":
-                    img_join_mode = (
-                        "broadcast"
-                        if stats["img_n"] <= cfg.fetch_broadcast_limit
-                        else "shuffle"
-                    )
-                img_small_side = (
-                    F.broadcast if img_join_mode == "broadcast"
-                    else (lambda d: d.hint("shuffle_hash"))
-                )
                 img_hit = (
                     img_pages.select(F.col("url").alias("url_ser"))
                     .join(
-                        img_small_side(img_rows.select("url_ser")),
+                        self._small_side(stats["img_n"])(
+                            img_rows.select("url_ser")
+                        ),
                         "url_ser", "inner",
                     )
                     .withColumn("success", F.lit(True))
@@ -928,14 +844,7 @@ class Engine:
             # frontier is adds-only: O(children) written per round; visited
             # rows are masked at read time and physically dropped by the
             # periodic fold (never an O(frontier) rewrite per round)
-            if self.bucketed_frontier is not None:
-                tasks.append(
-                    lambda: self.bucketed_frontier.insert(new_rows, r)
-                )
-            else:
-                tasks.append(
-                    lambda: self.catalog.append("frontier", new_rows, r)
-                )
+            tasks.append(lambda: self.catalog.append("frontier", new_rows, r))
         if img_rows is not None and stats["img_n"] > 0:
             tasks.append(lambda: self.catalog.append("images", img_rows, r))
 
@@ -976,15 +885,11 @@ class Engine:
                 },
             )
         except BaseException:
-            if self.bucketed_frontier is not None:
-                self.bucketed_frontier.rollback()
             self.catalog.abort()
             raise
         finally:
             hits.unpersist()
             judged.unpersist()
-        if self.bucketed_frontier is not None:
-            self.bucketed_frontier.finish_round()
         # driver counters advance only after a successful commit, so a caller
         # that catches a failed round and retries sees pre-round state
         self.total_visited = new_total
@@ -1006,26 +911,12 @@ class Engine:
             f" / write+commit {time.monotonic() - t_judged:.1f}, "
             f"jobs {self._job_counter() - jobs0})"
         )
-        # auto-migrate to the host-bucketed layout once the frontier is big
-        # enough that the politeness-rank shuffle dominates (the committed
-        # extra makes the migration sticky across resumes)
-        if (
-            self.bucketed_frontier is None
-            and self.cfg.frontier_auto_buckets
-            and self.frontier_size is not None
-            and self.frontier_size >= self.cfg.frontier_auto_bucket_threshold
-        ):
-            self._migrate_to_bucketed(r)
         # keep merge-on-read cost flat: fold long delta chains periodically
         # (the Iceberg rewrite_data_files analogue)
         for t in ("visited_ops", "seen", "edges", "fetched", "metrics", "images"):
             if self.catalog.delta_count(t) > 16:
                 self.catalog.compact(t, r)
-        if self.bucketed_frontier is not None:
-            lc = int(self.catalog.extra("frontier_folded_round", -1))
-            if r - lc > self.cfg.frontier_fold_deltas:
-                self._fold_frontier(r)
-        elif (
+        if (
             self.catalog.delta_count("frontier")
             > self.cfg.frontier_fold_deltas
         ):
@@ -1048,44 +939,13 @@ class Engine:
         return True
 
     # ------------------------------------------------------------------
-    def _migrate_to_bucketed(self, r: int) -> None:
-        """Fold the delta-chain frontier into a host-bucketed table
-        mid-crawl (equivalent to a physical fold, so added_round values and
-        the visit mask stay valid). Crash-safe: until the commit publishes
-        ``frontier_bucketed_n``, resume keeps reading the untouched
-        delta-chain (the overwrite below stays staged), and orphan bucketed
-        files are rewritten by the next migration attempt."""
-        from crabspark.tables import BucketedFrontier
-
-        try:
-            bf = BucketedFrontier(
-                self.catalog, self.cfg.frontier_auto_buckets
-            )
-        except Exception as e:  # session without catalog support
-            self._debug_log(f"auto-bucket unavailable, staying flat: {e}")
-            self.cfg.frontier_auto_buckets = 0
-            return
-        live = self._live_frontier(self.catalog.read("visited_ops"))
-        if live is None:
-            return
-        bf.replace(live, r)
-        # retire the delta-chain table (logical truncate; GC'd post-commit)
-        self.catalog.overwrite("frontier", self._empty(FRONTIER_SCHEMA), r)
-        self.catalog.commit(
-            r,
-            {
-                "frontier_bucketed_n": self.cfg.frontier_auto_buckets,
-                "frontier_folded_round": r,
-                "visited_at_fold": self.total_visited,
-                "frontier_seeded": True,
-            },
-        )
-        self.bucketed_frontier = bf
-        self.catalog.gc_superseded("frontier")
-        self._debug_log(
-            f"frontier auto-migrated to {self.cfg.frontier_auto_buckets} "
-            f"host buckets at ~{self.frontier_size} rows"
-        )
+    def _small_side(self, n: int):
+        """The fetch joins' size rule: broadcast a side of at most
+        ``fetch_broadcast_limit`` rows; a larger side is the build side of
+        a shuffle-hash join (a 10^8-row side must never be broadcast)."""
+        if n <= self.cfg.fetch_broadcast_limit:
+            return F.broadcast
+        return lambda d: d.hint("shuffle_hash")
 
     def _live_frontier(self, ops: DataFrame | None) -> DataFrame | None:
         """Merge-on-read view of the adds-only frontier: a row is live iff
@@ -1094,39 +954,8 @@ class Engine:
         visits happen at the start and discovery at the end, so a canon
         visited in round r and re-discovered in round r is queued again.
         Visits at or before the last fold are already applied physically,
-        so the mask join scans only the visits of the last few rounds.
-
-        Bucketed layout: the mask is a BROADCAST left-anti join (the visits
-        side is bounded by fold-period × batch size), which PRESERVES the
-        scan's hash-partitioning on host — the politeness window then needs
-        no Exchange. ``EXISTS visit with round > added_round`` is exactly
-        the ``max(visit round) <= added_round`` liveness predicate."""
+        so the mask join scans only the visits of the last few rounds."""
         lc = int(self.catalog.extra("frontier_folded_round", -1))
-        if self.bucketed_frontier is not None:
-            adds = self.bucketed_frontier.read()
-            if adds is None:
-                return None
-            if ops is None:
-                return adds
-            visits = ops.filter(
-                (F.col("op") == "visit") & (F.col("round") > lc)
-            ).select("url", "round")
-            # size-gate the mask broadcast: _round() folds before the mask
-            # side can outgrow the limit, so this normally broadcasts (and
-            # preserves the scan's host hash-partitioning — the politeness
-            # rank stays exchange-free). The defensive else-branch (resumed
-            # workdir mid-state) lets Spark plan a shuffle join instead of
-            # force-broadcasting an unbounded side.
-            bound = self._visits_since_fold()
-            mask_small = (
-                bound is not None and bound <= self.cfg.fetch_broadcast_limit
-            )
-            return adds.join(
-                F.broadcast(visits) if mask_small else visits,
-                (adds["canon"] == visits["url"])
-                & (visits["round"] > adds["added_round"]),
-                "left_anti",
-            )
         adds = self.catalog.read("frontier")
         if adds is None:
             return None
@@ -1147,14 +976,6 @@ class Engine:
             .drop("__vmax")
         )
 
-    def _visits_since_fold(self) -> int | None:
-        """Upper bound on the live-mask side: visits accumulated since the
-        last physical fold (every batch row is exactly one visit op)."""
-        vat = self.catalog.extra("visited_at_fold")
-        if vat is None:
-            return None
-        return max(0, self.total_visited - int(vat))
-
     def _fold_frontier(self, r: int) -> None:
         """Physically drop visited rows and fold the delta chain to one
         file set — the amortized O(live) rewrite (every
@@ -1163,22 +984,9 @@ class Engine:
         live = self._live_frontier(self.catalog.read("visited_ops"))
         if live is None:
             return
-        extras = {
-            "frontier_folded_round": r,
-            # resets the mask-side bound _visits_since_fold() tracks
-            "visited_at_fold": self.total_visited,
-        }
-        if self.bucketed_frontier is not None:
-            # added_round values are preserved, so the committed-round read
-            # mask stays valid; a crash mid-swap rolls forward from the
-            # intent, and an uncommitted folded_round extra only widens the
-            # (idempotent) visit mask
-            self.bucketed_frontier.replace(live, r)
-            self.catalog.commit(r, extras)
-        else:
-            self.catalog.overwrite("frontier", live, r)
-            self.catalog.commit(r, extras)
-            self.catalog.gc_superseded("frontier")
+        self.catalog.overwrite("frontier", live, r)
+        self.catalog.commit(r, {"frontier_folded_round": r})
+        self.catalog.gc_superseded("frontier")
 
     # ------------------------------------------------------------------
     def ingest_candidates(self, cand_catalog) -> int:
@@ -1235,20 +1043,7 @@ class Engine:
             )
             return 0
         try:
-            if self.bucketed_frontier is not None:
-                # guard: this insert lands at rnd == committed_round, so the
-                # round check alone cannot see a crash before the paired
-                # commit — recover() rolls it back while the committed
-                # high-water mark is still behind stream_mark (ADVICE r3)
-                self.bucketed_frontier.insert(
-                    new_rows, r - 1,
-                    guard={
-                        "key": "ingested_candidates_batch",
-                        "value": stream_mark,
-                    },
-                )
-            else:
-                self.catalog.append("frontier", new_rows, r - 1)
+            self.catalog.append("frontier", new_rows, r - 1)
             new_seen = new_rows.select(
                 F.col("canon").alias("url"), "sha1",
                 F.lit(r - 1).alias("round"),
@@ -1281,12 +1076,8 @@ class Engine:
                 },
             )
         except BaseException:
-            if self.bucketed_frontier is not None:
-                self.bucketed_frontier.rollback()
             self.catalog.abort()
             raise
-        if self.bucketed_frontier is not None:
-            self.bucketed_frontier.finish_round()
         self.frontier_size = new_size
         self._queued_seeds = queued_after
         self._debug_log(f"ingested {n} streamed candidates as new roots")

@@ -265,8 +265,11 @@ def encode_jpeg(
     """Baseline JFIF from an HxWx3 uint8 RGB array (Annex-K tables scaled
     by ``quality``). ``subsample=True`` writes 4:2:0 (2x2 luma sampling,
     box-filtered chroma — the web's dominant layout, and the decoder's
-    MCU-interleave/upsample path); default is 4:4:4. Deterministic."""
+    MCU-interleave/upsample path); default is 4:4:4. Deterministic.
+    Raises ValueError for a side outside 1..65535 (SOF0 stores u16)."""
     h, w, _ = pixels.shape
+    if not (1 <= h <= 0xFFFF and 1 <= w <= 0xFFFF):
+        raise ValueError(f"encode_jpeg: {h}x{w} outside 1..65535 per side")
     qy = _quality_scale(_QT_LUMA, quality)
     qc = _quality_scale(_QT_CHROMA, quality)
     hl, vl = (2, 2) if subsample else (1, 1)
@@ -470,6 +473,11 @@ def _decode(b: bytes) -> np.ndarray | None:
                 cs = seg[1 + 2 * i]
                 tt = seg[2 + 2 * i]
                 scan.append((cs, tt >> 4, tt & 0xF))
+            # only the first scan is decoded: a scan that leaves out frame
+            # components (non-interleaved or multi-scan baseline) would
+            # come back with wrong pixels
+            if {s[0] for s in scan} != {c[0] for c in frame[2]}:
+                return None
             data_pos = pos + 2 + ln
             return _decode_scan(
                 b, data_pos, frame, scan, qts, dc_tabs, ac_tabs,

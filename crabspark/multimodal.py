@@ -387,8 +387,11 @@ def _lzw_encode(indices: bytes, min_code_size: int) -> bytes:
 def encode_gif(pixels: np.ndarray) -> bytes:
     """GIF87a from an HxWx3 uint8 RGB array with <= 256 distinct colors
     (palette built from the image). Single frame, non-interlaced, real
-    LZW compression — stdlib only."""
+    LZW compression — stdlib only. Raises ValueError for a side outside
+    1..65535 (the screen descriptor stores u16)."""
     h, w, _ = pixels.shape
+    if not (1 <= h <= 0xFFFF and 1 <= w <= 0xFFFF):
+        raise ValueError(f"encode_gif: {h}x{w} outside 1..65535 per side")
     flat = pixels.reshape(-1, 3)
     colors, inverse = np.unique(flat, axis=0, return_inverse=True)
     if len(colors) > 256:
@@ -829,7 +832,8 @@ def audio_features(df: DataFrame) -> DataFrame:
 def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
     """Resize: REAL nearest-neighbor resample + same-format re-encode for
     decodable BMPs and PNGs (alpha preserved for RGBA PNG); deterministic
-    tagged passthrough for other formats (PIL would handle those).
+    tagged passthrough for other formats (PIL would handle those) and for
+    targets the format cannot encode (a JPEG or GIF side past 65535).
     Binary-in/binary-out shape either way."""
     schema = "media_id long, media binary, width int, height int, decoded boolean"
     tag = f"RSZ{width}x{height}:".encode()
@@ -839,6 +843,7 @@ def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
             out, decoded = [], []
             for b in pdf["media"]:
                 dec = decode_image(b)
+                enc_b = None
                 if dec is not None:
                     img, fmt = dec
                     ys = (np.arange(height) * img.shape[0] // height)
@@ -851,7 +856,12 @@ def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
                     enc = {"bmp": encode_bmp, "png": encode_png,
                            "gif": encode_gif,
                            "jpeg": lambda px: encode_jpeg(px, quality=90)}[fmt]
-                    out.append(enc(resized))
+                    try:
+                        enc_b = enc(resized)
+                    except ValueError:  # a target the format cannot encode
+                        pass
+                if enc_b is not None:
+                    out.append(enc_b)
                     decoded.append(True)
                 else:
                     out.append(tag + bytes(b or b""))

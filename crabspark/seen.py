@@ -158,7 +158,7 @@ class Bloom:
 def filter_unseen(
     candidates: DataFrame,
     seen_df: DataFrame | None,
-    bloom,  # Bloom | CuckooFilter | None — anything with might_contain()
+    bloom: Bloom | None,
     sha1_col: str = "url_sha1",
     cand_key: str = "url",
     seen_key: str = "url",
@@ -196,31 +196,3 @@ def filter_unseen(
     maybe_seen = probed.filter(F.col("__bloom_hit")).drop("__bloom_hit")
     survivors = maybe_seen.join(seen_keys, on=cand_key, how="left_anti")
     return definitely_new.unionByName(survivors)
-
-
-# --- prefilter backend dispatch (north rule: "bloom/cuckoo URL-seen") ------
-
-def make_seen_filter(cfg):
-    """Fresh prefilter per Config.seen_filter. Both backends share the
-    routing contract (miss = definitely new, hit = exact path), so crawl
-    output is identical across them; they trade merge model (bloom:
-    OR-anything vs cuckoo: same-geometry re-insert) against deletability
-    and probe count."""
-    if getattr(cfg, "seen_filter", "bloom") == "cuckoo":
-        from crabspark.cuckoo import CuckooFilter
-
-        return CuckooFilter(cfg.bloom_capacity)
-    return Bloom(cfg.bloom_capacity, cfg.bloom_fpp)
-
-
-def load_seen_filter(path: str, cfg):
-    """Resume-proof loader: sniffs the snapshot kind from the file (a
-    resume may carry a different seen_filter than the run that wrote the
-    snapshot — the FILE wins, same rule as Bloom's saved geometry)."""
-    with np.load(path, allow_pickle=False) as z:
-        is_cuckoo = "kind" in z.files
-    if is_cuckoo:
-        from crabspark.cuckoo import CuckooFilter
-
-        return CuckooFilter.load(path, cfg.bloom_capacity)
-    return Bloom.load(path, cfg.bloom_capacity, cfg.bloom_fpp)

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import gzip
 import os
+import re
 from typing import Iterable, Iterator
 
 import pandas as pd
@@ -299,6 +300,15 @@ def surt_key(url: str) -> str:
     return ",".join(reversed(host.split("."))) + ")/" + (rest if sep else "")
 
 
+def _cdx_field(s: str) -> str:
+    """Percent-encode whitespace (as UTF-8 bytes) so a URL stays ONE
+    space-separated CDX field; a raw space would split the line into
+    seven fields and read_cdx would drop the record."""
+    return re.sub(
+        r"\s", lambda m: "".join(f"%{b:02X}" for b in m[0].encode()), s
+    )
+
+
 def _cdx_ts(ts) -> str:
     """CDX 14-digit timestamp (yyyymmddhhmmss)."""
     if pd.isna(ts):
@@ -317,15 +327,17 @@ def _write_archive_with_cdx(
     records past the cut, not the file) — plus the standard CDX sidecar
     (`<name>.cdx`, one line per record: urlkey, 14-digit timestamp,
     original url, archive filename, compressed offset, compressed
-    length). read_cdx() turns the sidecars into a table; fetch_record()
-    uses (file, offset, length) for record-level random access."""
+    length; whitespace in urlkey and url percent-encoded). read_cdx()
+    turns the sidecars into a table; fetch_record() uses (file, offset,
+    length) for record-level random access."""
     blobs: list[bytes] = []
     cdx_lines: list[str] = ["CDX N b a g V S"]
     offset = 0
     for url, cts, rec in records:
         blob = gzip.compress(rec) if gzip_out else rec
         cdx_lines.append(
-            f"{surt_key(url)} {cts} {url} {name} {offset} {len(blob)}"
+            f"{_cdx_field(surt_key(url))} {cts} {_cdx_field(url)} {name} "
+            f"{offset} {len(blob)}"
         )
         offset += len(blob)
         blobs.append(blob)

@@ -80,9 +80,10 @@ def test_robots_off(spark, fixture_paths, tmp_path):
 
 
 def test_shuffle_fetch_join(spark, fixture_paths, tmp_path):
-    """fetch_join='shuffle': identical crawl through the non-broadcast
-    (shuffle-hash) fetch-join path — the 10^8-row-batch scale mode."""
-    cfg = cfg_with(free_crawl=True, fetch_join="shuffle")
+    """fetch_broadcast_limit=0: every batch and image side is past the
+    limit, so the crawl runs through the non-broadcast (shuffle-hash)
+    fetch joins — the 10^8-row-batch scale path — with identical output."""
+    cfg = cfg_with(free_crawl=True, fetch_broadcast_limit=0)
     compare(spark, fixture_paths, tmp_path, cfg, "shufflejoin")
 
 
@@ -160,25 +161,4 @@ def test_bucketed_pages_fetch_join(spark, fixture_paths, tmp_path):
         assert vis[url]["is_blocked"] == row["is_blocked"], url
         assert vis[url]["is_complete"] == row["is_complete"], url
     seen = {r["url"] for r in eng.read_seen().collect()}
-    assert seen == golden.seen
-
-
-def test_cuckoo_seen_filter_identical_output(spark, fixture_paths, tmp_path):
-    """seen_filter='cuckoo' must produce the EXACT bloom-run output (both
-    backends only route candidates between the skip-shuffle path and the
-    exact anti-join; neither may drop), and the persisted snapshot must
-    reload as a cuckoo filter on resume (the loader sniffs the file)."""
-    from crabspark.cuckoo import CuckooFilter
-
-    cfg = cfg_with(seen_filter="cuckoo")
-    golden = compare(spark, fixture_paths, tmp_path, cfg, "cuckoo_seen")
-    # resume reloads the persisted snapshot as the right class
-    eng2 = Engine(
-        spark, cfg, str(tmp_path / "cuckoo_seen"),
-        pages_path=f"{fixture_paths}/pages.parquet",
-        robots_path=f"{fixture_paths}/robots.parquet",
-    )
-    assert isinstance(eng2.bloom, CuckooFilter)
-    assert not eng2.bloom.saturated
-    seen = {r["url"] for r in eng2.read_seen().collect()}
     assert seen == golden.seen

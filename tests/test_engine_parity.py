@@ -267,31 +267,21 @@ def test_ephemeral_store_mode(spark, fixture_paths, tmp_path):
     assert not os.path.exists(work)
 
 
-def test_ephemeral_mode_with_bucketed_frontier(spark, fixture_paths, tmp_path):
-    """Ephemeral store + host-bucketed frontier compose: the bucketed
-    layout lives under the temp catalog root (never the caller's
-    workdir) and the crawl result matches the persistent bucketed run."""
+def test_seed_init_crash_reseeds_on_resume(spark, fixture_paths, tmp_path):
+    """A crash between the seed write and the init commit leaves a
+    frontier delta no committed manifest references; a fresh Engine must
+    seed again and crawl, not trust the file on disk and stop at once."""
     import os
 
     cfg = make_cfg(
         max_urls_to_visit=SMALL_CAP, collect_images=False,
-        scheduling="throughput", per_host_quota=0, sqlite_enabled=False,
-        frontier_buckets=8,
+        scheduling="throughput", per_host_quota=3,
     )
-    work = str(tmp_path / "never")
+    work = str(tmp_path / "initcrash")
     eng = new_engine(spark, fixture_paths, work, cfg)
-    eng.run()
-    assert not os.path.exists(work)
-    assert eng.bucketed_frontier is not None
-    visited = {r["url"] for r in eng.visit_log().select("url").collect()}
-    assert len(visited) == SMALL_CAP
-
-    cfg_p = make_cfg(
-        max_urls_to_visit=SMALL_CAP, collect_images=False,
-        scheduling="throughput", per_host_quota=0, frontier_buckets=8,
-    )
-    eng_p = new_engine(spark, fixture_paths, str(tmp_path / "p"), cfg_p)
-    eng_p.run()
-    assert visited == {
-        r["url"] for r in eng_p.visit_log().select("url").collect()
-    }
+    eng._init_frontier()  # seed delta hits disk... and we "crash" pre-commit
+    assert os.listdir(os.path.join(work, "frontier"))
+    eng2 = new_engine(spark, fixture_paths, work, cfg)
+    assert eng2.catalog.committed_round == -1
+    res = eng2.run(max_rounds=2)
+    assert res["visited"] > 0  # re-seeded and crawled, not a silent stop

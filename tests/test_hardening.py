@@ -1,9 +1,11 @@
 """Hardening fixes from the round-2 advisor review:
 
-- config enum validation (a typo'd fetch_join must error, not silently
-  fall into the shuffle branch);
+- config enum validation (a typo'd scheduling must error, not silently
+  fall into another mode); config files that still carry removed keys
+  load with defaults;
 - catalog manifest format-version gate (resuming an old-format workdir
-  fails fast with a clear message, not mid-round);
+  fails fast with a clear message, not mid-round), and the engine refuses
+  a workdir whose frontier lives in the removed host-bucketed layout;
 - ship-zip cache poisoning resistance (a pre-planted zip at the predictable
   cache path must be rebuilt, not trusted);
 - byte-safe html trim (non-UTF-8 bodies survive collect_html unchanged
@@ -12,6 +14,7 @@
   parse.
 """
 
+import dataclasses
 import json
 import os
 import zipfile
@@ -24,15 +27,6 @@ from crabspark.config import Config
 from crabspark.tables import Catalog
 
 
-def test_fetch_join_typo_raises():
-    with pytest.raises(ValueError, match="fetch_join"):
-        Config(fetch_join="bcast")
-    with pytest.raises(ValueError, match="fetch_join"):
-        Config(fetch_join="Broadcast")
-    for ok in ("auto", "broadcast", "shuffle"):
-        assert Config(fetch_join=ok).fetch_join == ok
-
-
 def test_scheduling_typo_raises():
     with pytest.raises(ValueError, match="scheduling"):
         Config(scheduling="bfs")
@@ -40,9 +34,29 @@ def test_scheduling_typo_raises():
 
 def test_config_overlay_revalidates(tmp_path):
     p = tmp_path / "cfg.json"
-    p.write_text(json.dumps({"fetch_join": "bcast"}))
-    with pytest.raises(ValueError, match="fetch_join"):
+    p.write_text(json.dumps({"scheduling": "bfs"}))
+    with pytest.raises(ValueError, match="scheduling"):
         Config.new(str(p))
+
+
+def test_config_file_with_removed_keys_loads_defaults(tmp_path):
+    """Keys of removed options are unknown keys: ignored, like the
+    reference's overlay (src/config.rs:42-140), while live keys still
+    apply."""
+    p = tmp_path / "cfg.json"
+    p.write_text(json.dumps({
+        "frontier_buckets": 8,
+        "frontier_auto_buckets": 8,
+        "frontier_auto_bucket_threshold": 10,
+        "seen_filter": "cuckoo",
+        "fetch_join": "shuffle",
+        "max_urls_to_visit": 7,
+    }))
+    cfg = Config.new(str(p))
+    assert dataclasses.asdict(cfg) == dataclasses.asdict(
+        Config(max_urls_to_visit=7)
+    )
+    assert not hasattr(cfg, "seen_filter")
 
 
 def test_catalog_rejects_old_format(tmp_path, request):
@@ -54,6 +68,29 @@ def test_catalog_rejects_old_format(tmp_path, request):
     )
     with pytest.raises(RuntimeError, match="format v1"):
         Catalog(str(root), spark)
+
+
+@pytest.mark.parametrize("mark", ["extra", "dir"])
+def test_engine_refuses_bucketed_frontier_workdir(tmp_path, mark):
+    """A store auto-migrated to the removed host-bucketed frontier layout
+    (manifest extra 'frontier_bucketed_n') or created in it (frontier
+    files under frontier_bucketed/) must not resume on the delta chain,
+    which would crawl on from an empty frontier."""
+    from crabspark.engine import Engine
+    from tests.sparkutil import get_spark
+
+    root = tmp_path / "wd"
+    root.mkdir()
+    extras = {"frontier_bucketed_n": 64} if mark == "extra" else {}
+    (root / "_manifest.json").write_text(json.dumps({
+        "tables": {}, "committed_round": 3, "extras": extras,
+        "format_version": Catalog.FORMAT_VERSION,
+    }))
+    if mark == "dir":
+        (root / "frontier_bucketed").mkdir()
+    with pytest.raises(RuntimeError, match="frontier_bucketed_n"):
+        Engine(get_spark(), Config(), str(root),
+               pages_path=str(tmp_path / "no-pages"))
 
 
 def test_catalog_roundtrips_format_version(tmp_path):

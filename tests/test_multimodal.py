@@ -748,6 +748,60 @@ def test_jpeg_decode_never_raises_and_rejects_nonbaseline():
     run()
 
 
+def test_jpeg_partial_scan_returns_none():
+    """Only the first scan is decoded, so a scan that lists fewer
+    components than the frame (non-interleaved or multi-scan baseline)
+    must give None, not wrong pixels."""
+    import struct
+
+    import numpy as np
+
+    from crabspark.jpeg import decode_jpeg, encode_jpeg
+
+    blob = encode_jpeg(np.full((16, 16, 3), 90, np.uint8))
+    sos = b"\xff\xda" + struct.pack(">HB", 12, 3) + b"\x01\x00\x02\x11\x03\x11"
+    assert blob.count(sos) == 1
+    # same scan header, listing only component 1 (Y, tables 0/0)
+    luma = b"\xff\xda" + struct.pack(">HB", 8, 1) + b"\x01\x00"
+    luma_only = blob.replace(sos, luma)
+    assert decode_jpeg(blob) is not None
+    assert decode_jpeg(luma_only) is None
+
+
+def test_encoders_reject_u16_overflow_and_resize_passes_through(media):
+    """JPEG and GIF store each side as u16: a 1x70000 image raises
+    ValueError, and resize_images to that size takes its tagged
+    pass-through instead of failing the task with struct.error."""
+    import numpy as np
+    import pandas as pd
+
+    from crabspark.jpeg import encode_jpeg
+
+    wide = np.zeros((1, 70000, 3), np.uint8)
+    for enc in (encode_jpeg, M.encode_gif):
+        with pytest.raises(ValueError, match="65535"):
+            enc(wide)
+        with pytest.raises(ValueError, match="65535"):
+            enc(np.zeros((0, 4, 3), np.uint8))
+
+    spark, _ = media
+    blobs = [encode_jpeg(np.full((8, 8, 3), 40, np.uint8)),
+             M.encode_gif(np.full((8, 8, 3), 40, np.uint8))]
+    pdf = pd.DataFrame(
+        {
+            "media_id": pd.Series([1, 2], dtype="int64"),
+            "kind": ["image", "image"],
+            "media": blobs,
+            "source_url": ["http://i.example/x.jpg", "http://i.example/x.gif"],
+            "content_type": ["image/jpeg", "image/gif"],
+        }
+    )
+    rows = M.resize_images(spark.createDataFrame(pdf), 70000, 1).collect()
+    for r, blob in zip(sorted(rows, key=lambda r: r["media_id"]), blobs):
+        assert r["decoded"] is False
+        assert bytes(r["media"]) == b"RSZ70000x1:" + blob
+
+
 def test_jpeg_flows_through_image_operators(media):
     """decode_image/image_features/resize_images treat baseline JPEG as
     a REAL format now: features come from pixels (not the fake), resize

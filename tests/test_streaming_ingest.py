@@ -320,9 +320,9 @@ def test_neardup_gate_incremental_dedup(spark, tmp_path):
 
 
 def test_ingest_first_then_run_keeps_roots(spark, tmp_path):
-    """Ingest BEFORE the first run() on a bucketed store: the committed
-    ingested roots must survive run()'s seed-existence check (a re-seed
-    replace() would wipe them) and get crawled."""
+    """Ingest BEFORE the first run(): the committed ingested roots must
+    survive run()'s seed-existence check (a re-seed would wipe them) and
+    get crawled."""
     import pandas as pd
 
     from crabspark.config import Config
@@ -361,7 +361,6 @@ def test_ingest_first_then_run_keeps_roots(spark, tmp_path):
     cfg.scheduling = "throughput"
     cfg.collect_images = False
     cfg.max_urls_to_visit = 50
-    cfg.frontier_buckets = 8
     eng = Engine(
         spark, cfg, str(tmp_path / "work"),
         pages_path=f"{fixture}/pages.parquet",
@@ -374,6 +373,80 @@ def test_ingest_first_then_run_keeps_roots(spark, tmp_path):
     eng.run(max_rounds=3)
     urls = [r["url"] for r in eng.visit_log().collect()]
     assert "isle.example/solo.html" in urls  # root survived run()'s init
+
+
+def test_ingest_mid_crawl_then_resume(spark, tmp_path):
+    """Captures ingested mid-crawl are crawled after a resume by a FRESH
+    Engine over the same workdir: the ingest commit (frontier delta, seen
+    delta, bloom snapshot, high-water mark) is all the new process needs."""
+    import pandas as pd
+
+    from crabspark.config import Config
+    from crabspark.engine import Engine
+
+    data = gen_pages.generate(n_pages=40, seed=11)
+    fixture = str(tmp_path / "fx")
+    os.makedirs(fixture)
+    data["pages"].to_parquet(
+        f"{fixture}/pages.parquet", index=False,
+        coerce_timestamps="us", allow_truncated_timestamps=True,
+    )
+    data["robots"].to_parquet(f"{fixture}/robots.parquet", index=False)
+
+    cfg = Config.new()
+    cfg.seeds = [gen_pages.SEED_URL]
+    cfg.max_urls_to_visit = 5000
+    cfg.scheduling = "throughput"
+    cfg.per_host_quota = 3
+    cfg.collect_images = False
+    work = str(tmp_path / "work")
+    eng = Engine(
+        spark, cfg, work,
+        pages_path=f"{fixture}/pages.parquet",
+        robots_path=f"{fixture}/robots.parquet",
+    )
+    eng.run(max_rounds=2)
+    mid_visited = eng.total_visited
+
+    island = pd.DataFrame(
+        {
+            "url": [f"https://isle.example/p{i}.html" for i in range(3)],
+            "warc_ts": pd.to_datetime(["2025-03-01T12:00:00Z"] * 3),
+            "html": [b"<html><body><p>isle</p></body></html>"] * 3,
+            "text": ["isle"] * 3,
+            "lang": ["en"] * 3,
+        }
+    )
+    incoming = str(tmp_path / "incoming")
+    os.makedirs(incoming)
+    island.to_parquet(
+        f"{incoming}/part-0.parquet", index=False,
+        coerce_timestamps="us", allow_truncated_timestamps=True,
+    )
+    cand_cat = Catalog(str(tmp_path / "cand"), spark)
+    q = start_page_ingest(spark, incoming, cand_cat, str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    assert eng.ingest_candidates(cand_cat) == 3
+
+    eng2 = Engine(
+        spark, cfg, work,
+        pages_path=f"{fixture}/pages.parquet",
+        robots_path=f"{fixture}/robots.parquet",
+    )
+    eng2.pages = eng2.pages.unionByName(
+        spark.read.parquet(f"{incoming}/part-0.parquet")
+    )
+    assert eng2.total_visited == mid_visited  # resumed, not restarted
+    assert eng2.ingest_candidates(cand_cat) == 0  # high-water mark persisted
+    eng2.run()
+    vl = eng2.visit_log().select("url", "referrer").collect()
+    isle = [r for r in vl if r["url"].startswith("isle.example")]
+    assert len(isle) == 3
+    assert all(r["referrer"] == "INGESTED" for r in isle)
+    # no dup visits anywhere except the legal seed re-queue (Q10)
+    urls = [r["url"] for r in vl]
+    dupes = {u for u in urls if urls.count(u) > 1}
+    assert dupes <= {"mega1.com"}, dupes
 
 
 def test_quality_gate_filters_at_ingest(spark, tmp_path):

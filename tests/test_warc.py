@@ -358,6 +358,37 @@ def test_cdx_index_roundtrip_fetch_by_offset(spark, tmp_path):
         assert f"<html>page {i}</html>".encode() in body
 
 
+def test_cdx_url_with_whitespace_roundtrips(spark, tmp_path):
+    """A URL with whitespace is percent-encoded in the CDX url and urlkey
+    fields, so read_cdx keeps the record and fetch_record still returns
+    the capture under its raw URL."""
+    from crabspark.warc import fetch_record, read_cdx
+
+    urls = ["http://sp.example/a b.html", "http://sp.example/t\tab.html",
+            "http://sp.example/plain.html"]
+    pdf = pd.DataFrame(
+        {
+            "url": urls,
+            "warc_ts": pd.to_datetime(["2024-05-01T12:00:00"] * 3),
+            "html": [f"<html>page {i}</html>".encode() for i in range(3)],
+            "text": ["x"] * 3,
+            "lang": [None] * 3,
+        }
+    )
+    out = str(tmp_path / "warcs")
+    write_warc(spark.createDataFrame(pdf).coalesce(1), out)
+    idx = sorted(read_cdx(spark, out).collect(), key=lambda r: r.offset)
+    assert [r.url for r in idx] == [
+        "http://sp.example/a%20b.html", "http://sp.example/t%09ab.html",
+        "http://sp.example/plain.html",
+    ]
+    assert idx[0].urlkey == "example,sp)/a%20b.html"
+    for i, (r, url) in enumerate(zip(idx, urls)):
+        rec = fetch_record(out, r.file, r.offset, r.length)
+        assert rec["headers"]["warc-target-uri"] == url
+        assert f"<html>page {i}</html>".encode() in rec["body"]
+
+
 def test_surt_key():
     from crabspark.warc import surt_key
 
