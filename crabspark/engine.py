@@ -444,7 +444,6 @@ class Engine:
         # as build side — a 10^8-row round batch must never be broadcast.
         # The fused page UDF then moves each html binary across Arrow
         # exactly once, and only text/links survive ---
-        small_side = self._small_side(batch_n)
         # SPJ-style bucket pruning: with a url-bucketed pages layout, scan
         # only the partitions the batch can hit (<= n_buckets ids, observed
         # for free on the batch-checkpoint job — O(buckets) driver state,
@@ -458,12 +457,13 @@ class Engine:
         hits = (
             pages_src.select("url", "html")
             .join(
-                small_side(
+                self._small_side(
                     batch.select(
                         F.col("url"), F.col("canon").alias("p_canon"),
                         F.col("priority").alias("p_priority"),
                         F.col("depth").alias("p_depth"),
-                    )
+                    ),
+                    batch_n,
                 ),
                 on="url",
                 how="inner",
@@ -763,8 +763,8 @@ class Engine:
                 img_hit = (
                     img_pages.select(F.col("url").alias("url_ser"))
                     .join(
-                        self._small_side(stats["img_n"])(
-                            img_rows.select("url_ser")
+                        self._small_side(
+                            img_rows.select("url_ser"), stats["img_n"]
                         ),
                         "url_ser", "inner",
                     )
@@ -939,13 +939,14 @@ class Engine:
         return True
 
     # ------------------------------------------------------------------
-    def _small_side(self, n: int):
+    def _small_side(self, side: DataFrame, n: int) -> DataFrame:
         """The fetch joins' size rule: broadcast a side of at most
-        ``fetch_broadcast_limit`` rows; a larger side is the build side of
-        a shuffle-hash join (a 10^8-row side must never be broadcast)."""
+        ``fetch_broadcast_limit`` rows (``n``); a larger side is the build
+        side of a shuffle-hash join (a 10^8-row side must never be
+        broadcast)."""
         if n <= self.cfg.fetch_broadcast_limit:
-            return F.broadcast
-        return lambda d: d.hint("shuffle_hash")
+            return F.broadcast(side)
+        return side.hint("shuffle_hash")
 
     def _live_frontier(self, ops: DataFrame | None) -> DataFrame | None:
         """Merge-on-read view of the adds-only frontier: a row is live iff
