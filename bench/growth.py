@@ -77,7 +77,7 @@ def main() -> None:
 
     from crabspark.config import Config
     from crabspark.engine import Engine
-    from crabspark.tables import bucketize_pages
+    from crabspark.tables import bucketize_pages, pages_bucket_count
     from fixtures import gen_pages
 
     fxdir = os.path.join(REPO, ".bench_data", f"growth{args.pages}")
@@ -122,7 +122,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     bucketed = os.path.join(fxdir, "pages_bucketed.parquet")
-    if not os.path.exists(os.path.join(bucketed, "_crabspark_buckets.json")):
+    if pages_bucket_count(bucketed) is None:
         print("bucketizing pages ...", file=sys.stderr)
         bucketize_pages(spark, os.path.join(fxdir, "pages.parquet"),
                         bucketed, n_buckets=64)

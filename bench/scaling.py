@@ -45,6 +45,7 @@ def run_worker(cpus: int, fxdir: str, out_path: str, cap: int, parts: int,
 
     from crabspark.config import Config
     from crabspark.engine import Engine
+    from crabspark.tables import pages_bucket_count
     from fixtures import gen_pages
 
     if exec_mode == "cluster":
@@ -139,7 +140,7 @@ def run_worker(cpus: int, fxdir: str, out_path: str, cap: int, parts: int,
     warm_cfg = copy.deepcopy(cfg)
     warm_cfg.max_urls_to_visit = 40
     pages_path = os.path.join(fxdir, "pages_bucketed.parquet")
-    if not os.path.exists(os.path.join(pages_path, "_crabspark_buckets.json")):
+    if pages_bucket_count(pages_path) is None:
         pages_path = os.path.join(fxdir, "pages.parquet")
     warm_work = tempfile.mkdtemp(prefix=f"crabspark-warm-{cpus}-")
     try:
@@ -315,6 +316,7 @@ def main() -> None:
         assert n2 == 4 * n1, "each pair must be N,4N"
         pairs.append((n1, n2))
 
+    from crabspark.tables import pages_bucket_count
     from fixtures import gen_pages
 
     fxdir = os.path.join(
@@ -328,7 +330,7 @@ def main() -> None:
                         branching=args.branching, body_scale=args.body_scale)
         print(f"fixture generated in {time.monotonic()-t0:.0f}s", file=sys.stderr)
     bucketed = os.path.join(fxdir, "pages_bucketed.parquet")
-    if not os.path.exists(os.path.join(bucketed, "_crabspark_buckets.json")):
+    if pages_bucket_count(bucketed) is None:
         # url-hash-bucketed pages layout (the 100-TB scan shape): small
         # rounds prune the fetch-join scan to their buckets instead of
         # streaming the whole snapshot. One-time rewrite, cached on disk.

@@ -9,7 +9,7 @@ defaults entirely).
 Rebuild-only fields extend the reference for the distributed engine:
 ``scheduling`` ('dfs-parity' reproduces the sequential reference order,
 'throughput' is the benchmarked BSP mode), ``max_depth``, ``per_host_quota``,
-``salt_buckets``, ``seeds`` (the reference has a single starting_url).
+``seeds`` (the reference has a single starting_url).
 """
 
 from __future__ import annotations
@@ -102,7 +102,6 @@ class Config:
     max_depth: int | None = None  # None = unbounded (cap is the stop condition)
     scheduling: str = "dfs-parity"  # 'dfs-parity' | 'throughput'
     per_host_quota: int | None = 1  # URLs/host/round politeness; None/0 = off
-    salt_buckets: int = 8  # salt fan-out for host-skew mitigation
     bloom_capacity: int = 1_000_000  # expected seen-set size per bloom epoch
     bloom_fpp: float = 0.01
     # the fetch joins broadcast their small side (the round batch, or the

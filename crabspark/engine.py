@@ -1,24 +1,35 @@
 """The crawl engine: a Bulk-Synchronous-Parallel frontier loop over Spark.
 
 Each round is the distributed form of one reference recursion layer
-(SURVEY.md §3.4; reference crawl_website_dfs src/crawl.rs:29-120):
+(SURVEY.md §3.4; reference crawl_website_dfs src/crawl.rs:29-120).
+``Engine._round`` drives one private method per layer:
 
-  frontier --select_batch--> visit batch (politeness rank + cap trim, F6)
-    -> visited_ops 'visit' rows (MERGE-equivalent upsert log, S6)
-    -> fetch-simulation join against the pages table (J1): a batch of at
-       most cfg.fetch_broadcast_limit rows broadcasts INTO the pages scan
-       (the 100-TB side streams, never shuffles); a larger one is the
-       build side of a shuffle-hash join; misses are fetch failures (Q4)
-    -> extract_links UDF -> posexplode (E2/E3) -> fused resolve/validate/
-       canonicalize/sha1 UDF (C1/C2/F1-F4)
-    -> first-observer dedup (U1/U2) -> bloom + anti-join seen filter (J2)
-    -> completed filter (J3, observable on resume runs only)
-    -> robots join on host + per-host-group executor-side matcher (J4/E4;
-       no robots body ever reaches the driver; blocked -> 'block' rows, Q6)
-    -> survivors: imgs join the assets table (Content-Type predicate F5,
-       BLOB stored, S2/S8), links become next-frontier ADD rows with
-       DFS-prefix priorities (§7.4) and edge rows for the completion agg
-    -> seen deltas + bloom update, metrics, atomic round commit.
+  select (``_select``): frontier --select_batch--> visit batch
+    (politeness rank + cap trim, F6), materialized by one checkpoint job
+  fetch+extract (``_fetch_extract``): fetch-simulation join against the
+    pages table (J1; ``_pages_join``): a batch of at most
+    cfg.fetch_broadcast_limit rows broadcasts INTO the pages scan (the
+    100-TB side streams, never shuffles); a larger one is the build side
+    of a shuffle-hash join; misses are fetch failures (Q4) -> fused page
+    UDF (text + links)
+  resolve+dedup (``_resolve_dedup``): posexplode (E2/E3) -> fused
+    resolve/validate/canonicalize/sha1 UDF (C1/C2/F1-F4) -> first-observer
+    dedup (U1/U2)
+  judge (``_judge``): bloom + anti-join seen filter (J2) -> completed
+    filter (J3, observable on resume runs only) -> robots join on host +
+    per-host-group executor-side matcher (J4/E4; no robots body ever
+    reaches the driver)
+  stats (``_round_stats``): ONE aggregate job runs the whole pipeline and
+    returns every per-round scalar and per-partition lineage stat
+  emit (``_emit``): visited_ops 'visit' rows (MERGE-equivalent upsert log,
+    S6) and 'block' rows (Q6); imgs join the assets table (Content-Type
+    predicate F5, BLOB stored, S2/S8); links become next-frontier ADD rows
+    with DFS-prefix priorities (§7.4) and edge rows for the completion agg
+  publish (``_publish``): concurrent table writes + seen deltas + bloom
+    update + metrics, then the atomic round commit or an abort — the same
+    path stream ingest (``ingest_candidates``) commits through
+  maintenance (``_maintain``): delta-chain compaction, frontier fold,
+    bloom snapshot GC.
 
 Scale design notes (10^10 frontier):
 - nothing driver-resident scales with frontier size: the bloom is fixed-size
@@ -46,19 +57,20 @@ then becomes the observable resume gate, exactly like the reference.
 
 from __future__ import annotations
 
+import glob
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from crabspark import frontier as frontier_mod
 from crabspark import udfs, urlkit
 from crabspark.config import Config
 from crabspark.seen import Bloom, filter_unseen
-from crabspark.tables import Catalog
+from crabspark.tables import Catalog, pages_bucket, pages_bucket_count
 
 FRONTIER_SCHEMA = (
     "url string, canon string, sha1 string, host string, referrer string, "
@@ -127,16 +139,7 @@ class Engine:
         self.pages = spark.read.parquet(pages_path)
         # url-hash-bucketed pages layout (tables.bucketize_pages): the
         # fetch join prunes the scan to the batch's bucket partitions
-        self.pages_buckets: int | None = None
-        try:
-            import json as _json
-
-            with open(
-                os.path.join(pages_path, "_crabspark_buckets.json")
-            ) as f:
-                self.pages_buckets = int(_json.load(f)["n_buckets"])
-        except (OSError, ValueError, KeyError, TypeError):
-            self.pages_buckets = None
+        self.pages_buckets = pages_bucket_count(pages_path)
         self.robots_df = (
             spark.read.parquet(robots_path) if robots_path else None
         )
@@ -152,16 +155,12 @@ class Engine:
         self._blocked_join = udfs.blocked_join_udf(
             cfg.user_agents, cfg.respect_robots
         )
-        # canonical seed set (tiny, driver-resident): seeds are the only
-        # canons that can be re-discovered while still queued, so the
-        # queued-seed set is the whole frontier-dedup state the driver needs
-        seed_parsed = urlkit.parse_serialize(
-            pd.Series(self.cfg.seeds, dtype=object)
-        )
-        seed_canon = urlkit.canonicalize(seed_parsed["ser"])
-        self._all_seed_canons = {
-            c for s, c in zip(seed_parsed["ser"], seed_canon) if s is not None
-        }
+        # canonical seed rows, parsed once (tiny, driver-resident): seeds
+        # are the only canons that can be re-discovered while still queued,
+        # so the queued-seed set is the whole frontier-dedup state the
+        # driver needs
+        self._seed_rows = self._parse_seeds()
+        self._all_seed_canons = {row[1] for row in self._seed_rows}
         self._queued_seeds = set(self.catalog.extra("queued_seeds", []))
         # measurement-only: per-round (select, pipeline, write+commit)
         # wall splits for this PROCESS's rounds (not persisted; resumes
@@ -189,13 +188,7 @@ class Engine:
                 self.round,
             )
             self.total_visited = 0
-            self._init_frontier()
-            self.catalog.commit(
-                self.round - 1,
-                {"total_visited": 0, "frontier_size": self.frontier_size,
-                 "queued_seeds": sorted(self._queued_seeds),
-                 "frontier_folded_round": self.round - 1},
-            )
+            self._seed_frontier(frontier_folded_round=self.round - 1)
 
     # ------------------------------------------------------------------
     def _debug_log(self, msg: str) -> None:
@@ -220,8 +213,7 @@ class Engine:
             return 0
 
     def _stage_metrics_local(
-        self, r, part_stats, fetch_parts, stats, batch_n, fetched_n,
-        new_total, new_frontier_size, t0,
+        self, r, stats, batch_n, new_total, new_frontier_size, t0,
     ) -> None:
         """Stage the per-round metrics tables as driver-local pyarrow
         parquet — O(partitions) rows, zero Spark jobs. Schemas mirror the
@@ -244,7 +236,7 @@ class Engine:
                 "blocked": int(row["blocked_n"] or 0),
                 "children": int(row["child_n"] or 0),
             }
-            for row in part_stats
+            for row in stats["part_stats"]
         ] + [
             {
                 "round": r, "stage": "fetch",
@@ -252,7 +244,7 @@ class Engine:
                 "rows": int(row["fetched_n"] or 0),
                 "blocked": 0, "children": 0,
             }
-            for row in fetch_parts
+            for row in stats["fetch_parts"]
         ]
         self.catalog.append_local(
             "metrics_partitions",
@@ -270,9 +262,9 @@ class Engine:
             ]
         )
         m_row = {
-            "round": r, "batch_n": batch_n, "fetched_n": fetched_n,
-            "failed_n": batch_n - fetched_n, "cand_n": stats["cand_n"],
-            "blocked_n": stats["blocked_n"],
+            "round": r, "batch_n": batch_n, "fetched_n": stats["fetched_n"],
+            "failed_n": batch_n - stats["fetched_n"],
+            "cand_n": stats["cand_n"], "blocked_n": stats["blocked_n"],
             "completed_dropped_n": stats["completed_dropped_n"],
             "child_n": stats["child_n"], "img_n": stats["img_n"],
             "total_visited": new_total,
@@ -285,28 +277,45 @@ class Engine:
             "metrics", pa.Table.from_pylist([m_row], schema=m_schema), r
         )
 
-    def _init_frontier(self) -> None:
-        rows = []
+    def _parse_seeds(self) -> list[tuple]:
+        """(ser, canon, sha1, host, priority) of each distinct valid seed,
+        first occurrence wins; the priority keeps its config index."""
         seeds = pd.Series(self.cfg.seeds, dtype=object)
         parsed = urlkit.parse_serialize(seeds)
         canon = urlkit.canonicalize(parsed["ser"])
         sha1 = urlkit.sha1_hex(canon)
-        seen_canons: set[str] = set()
+        rows, canons = [], set()
         for i in range(len(seeds)):
-            if parsed["ser"].iloc[i] is None or canon.iloc[i] in seen_canons:
+            if parsed["ser"].iloc[i] is None or canon.iloc[i] in canons:
                 continue
-            seen_canons.add(canon.iloc[i])
-            rows.append(
-                (
-                    parsed["ser"].iloc[i], canon.iloc[i], sha1.iloc[i],
-                    parsed["domain"].iloc[i], "STARTING_URL",
-                    frontier_mod.seed_priority(i), 0, self.round - 1,
-                )
-            )
+            canons.add(canon.iloc[i])
+            rows.append((
+                parsed["ser"].iloc[i], canon.iloc[i], sha1.iloc[i],
+                parsed["domain"].iloc[i], frontier_mod.seed_priority(i),
+            ))
+        return rows
+
+    def _init_frontier(self) -> None:
+        """Stage the seed frontier (committed by ``_seed_frontier``)."""
+        rows = [
+            (ser, canon, sha1, host, "STARTING_URL", prio, 0, self.round - 1)
+            for ser, canon, sha1, host, prio in self._seed_rows
+        ]
         seeds_df = self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
         self.catalog.overwrite("frontier", seeds_df, self.round)
         self.frontier_size = len(rows)
-        self._queued_seeds = set(seen_canons)
+        self._queued_seeds = set(self._all_seed_canons)
+
+    def _seed_frontier(self, **extras) -> None:
+        """Write the seed frontier and commit it: a fresh crawl, or a
+        fresh-seen run over an existing store."""
+        self._init_frontier()
+        self.catalog.commit(
+            self.round - 1,
+            {"total_visited": self.total_visited,
+             "frontier_size": self.frontier_size,
+             "queued_seeds": sorted(self._queued_seeds), **extras},
+        )
 
     # ------------------------------------------------------------------
     def run(self, max_rounds: int | None = None) -> dict:
@@ -319,13 +328,7 @@ class Engine:
         # so the next run seeds again. A committed streaming ingest counts:
         # its roots are kept and the config seeds stay unqueued.
         if not self.catalog.exists("frontier"):
-            self._init_frontier()
-            self.catalog.commit(
-                self.round - 1,
-                {"total_visited": self.total_visited,
-                 "frontier_size": self.frontier_size,
-                 "queued_seeds": sorted(self._queued_seeds)},
-            )
+            self._seed_frontier()
         started = time.monotonic()
         rounds_done = 0
         timed_out = False
@@ -357,9 +360,10 @@ class Engine:
 
     # ------------------------------------------------------------------
     def _round(self) -> bool:
+        """One BSP round, layer by layer (module docstring). Returns False
+        when the frontier is drained."""
         r = self.round
         t0 = time.monotonic()
-        cfg = self.cfg
         # the driver's frontier-size estimate is provably >= the true live
         # count (children are counted before the queued-seed/depth filters;
         # batch subtraction is exact), so 0 means empty — skip the drain
@@ -369,9 +373,87 @@ class Engine:
             return False
         jobs0 = self._job_counter()
         ops = self.catalog.read("visited_ops")
+        selected = self._select(r, ops)
+        if selected is None:
+            self._debug_log(
+                f"round {r}: drain check empty, {time.monotonic() - t0:.1f}s"
+            )
+            return False
+        batch, batch_n, bids, queued_now = selected
+        t_batch = time.monotonic()
+
+        hits, fetched = self._fetch_extract(r, batch, batch_n, bids)
+        judged = self._judge(self._resolve_dedup(hits), ops)
+        stats = self._round_stats(judged, hits)
+        t_judged = time.monotonic()
+
+        writes, queued_after = self._emit(
+            r, batch, judged, fetched, stats, queued_now
+        )
+        new_total = self.total_visited + batch_n
+        new_frontier_size = self.frontier_size
+        if new_frontier_size is not None:
+            # children all enter the frontier; batch rows leave it. Depth-
+            # filtered children make this an overestimate (safe: trims more).
+            new_frontier_size = max(
+                0, new_frontier_size - batch_n + stats["child_n"]
+            )
+        try:
+            self._publish(
+                r, writes,
+                {
+                    "total_visited": new_total,
+                    "frontier_size": new_frontier_size,
+                    "queued_seeds": sorted(queued_after),
+                },
+                # an all-miss round leaves the seen set, the bloom and its
+                # snapshot pointer unchanged
+                seen=judged if stats["cand_n"] > 0 else None,
+                # metrics rows are O(partitions) driver-local data: staged
+                # as pyarrow parquet with ZERO Spark jobs (a Spark write
+                # job for 40 rows is pure fixed floor)
+                stage_local=lambda: self._stage_metrics_local(
+                    r, stats, batch_n, new_total, new_frontier_size, t0
+                ),
+            )
+        finally:
+            hits.unpersist()
+            judged.unpersist()
+        # driver counters advance only after a successful commit, so a caller
+        # that catches a failed round and retries sees pre-round state
+        self.total_visited = new_total
+        self.frontier_size = new_frontier_size
+        self._queued_seeds = queued_after
+        self.phase_splits.append({
+            "round": r,
+            "select_s": round(t_batch - t0, 3),
+            "pipeline_s": round(t_judged - t_batch, 3),
+            "write_s": round(time.monotonic() - t_judged, 3),
+        })
+        self._debug_log(
+            f"round {r}: visited {batch_n}, fetched {stats['fetched_n']}, "
+            f"candidates {stats['cand_n']}, blocked {stats['blocked_n']}, "
+            f"children {stats['child_n']}, "
+            f"frontier ~{new_frontier_size}, "
+            f"{time.monotonic() - t0:.1f}s "
+            f"(select {t_batch - t0:.1f} / pipeline {t_judged - t_batch:.1f}"
+            f" / write+commit {time.monotonic() - t_judged:.1f}, "
+            f"jobs {self._job_counter() - jobs0})"
+        )
+        self._maintain(r)
+        self.round = r + 1
+        return True
+
+    # --- layers -------------------------------------------------------
+    def _select(self, r: int, ops: DataFrame | None):
+        """Select layer: politeness rank + cap trim of the live frontier,
+        materialized as this round's visit batch. Returns (batch, batch_n,
+        fetch-join bucket ids or None, queued seeds this round does not
+        visit), or None when there is nothing to visit."""
         frontier = self._live_frontier(ops)
         if frontier is None:
-            return False
+            return None
+        cfg = self.cfg
         remaining = cfg.max_urls_to_visit - self.total_visited
         # skip the global cap trim (a full frontier sort) whenever the cap
         # cannot bind this round — the driver tracks the frontier size
@@ -384,16 +466,12 @@ class Engine:
         # checkpoint job CARRIES this round's batch-side scalars as observed
         # metrics (count, fetch-join bucket ids, queued-seed hits) — zero
         # extra jobs for any of them.
-        from pyspark.sql import Observation
-
         batch_obs = Observation(f"batch-{r}")
         obs_exprs = [F.count(F.lit(1)).alias("n")]
         if self.pages_buckets:
             obs_exprs.append(
-                F.collect_set(
-                    F.pmod(F.xxhash64("url"), F.lit(self.pages_buckets))
-                    .cast("int")
-                ).alias("buckets")
+                F.collect_set(pages_bucket("url", self.pages_buckets))
+                .alias("buckets")
             )
         if self._queued_seeds:
             obs_exprs.append(
@@ -406,8 +484,7 @@ class Engine:
             )
         batch = (
             frontier_mod.select_batch(
-                frontier, trim, cfg.scheduling, cfg.per_host_quota,
-                cfg.salt_buckets,
+                frontier, trim, cfg.scheduling, cfg.per_host_quota
             )
             .observe(batch_obs, *obs_exprs)
             .localCheckpoint()
@@ -417,56 +494,30 @@ class Engine:
         frontier_mod.release_temps()
         bstats = batch_obs.get
         batch_n = int(bstats["n"])
+        if batch_n == 0:
+            return None
+        bids = None
+        if self.pages_buckets:
+            bids = [int(b) for b in (bstats.get("buckets") or [])]
         # seeds visited this round leave the queued set; applied to
         # self._queued_seeds only at commit time (failure restores cleanly)
         queued_now = self._queued_seeds - set(bstats.get("visited_seeds") or [])
-        if batch_n == 0:
-            self._debug_log(
-                f"round {r}: drain check empty, {time.monotonic() - t0:.1f}s"
-            )
-            return False
-        t_batch = time.monotonic()
+        return batch, batch_n, bids, queued_now
 
-        # --- visit rows (upsert log): the DFS priority string IS the
-        # within-round order key, so no global row_number sort is needed;
-        # written together with this round's block rows in one delta ---
-        visits = batch.select(
-            F.col("canon").alias("url"),
-            F.col("referrer"),
-            F.lit(r).alias("round"),
-            F.col("priority"),
-            F.lit("visit").alias("op"),
-        )
-
-        # --- fetch-simulation (J1). Small batches broadcast INTO the pages
-        # scan (pages side streams, no shuffle); batches beyond
-        # fetch_broadcast_limit switch to a shuffle-hash join with the batch
-        # as build side — a 10^8-row round batch must never be broadcast.
-        # The fused page UDF then moves each html binary across Arrow
-        # exactly once, and only text/links survive ---
-        # SPJ-style bucket pruning: with a url-bucketed pages layout, scan
-        # only the partitions the batch can hit (<= n_buckets ids, observed
-        # for free on the batch-checkpoint job — O(buckets) driver state,
-        # never O(rows)). A small batch then reads a small fraction of the
-        # 100-TB table; a huge batch's shuffle-hash join runs over pruned
-        # input.
-        pages_src = self.pages
-        if self.pages_buckets:
-            bids = [int(b) for b in (bstats.get("buckets") or [])]
-            pages_src = self.pages.filter(F.col("bucket").isin(bids))
+    def _fetch_extract(self, r: int, batch, batch_n: int, bids):
+        """Fetch+extract layer (J1): the batch joins the pages table, then
+        the fused page UDF moves each html binary across Arrow exactly
+        once, and only text/links survive. Returns the cached page hits
+        and this round's ``fetched`` rows."""
+        cfg = self.cfg
         hits = (
-            pages_src.select("url", "html")
-            .join(
-                self._small_side(
-                    batch.select(
-                        F.col("url"), F.col("canon").alias("p_canon"),
-                        F.col("priority").alias("p_priority"),
-                        F.col("depth").alias("p_depth"),
-                    ),
-                    batch_n,
+            self._pages_join(
+                batch.select(
+                    F.col("url"), F.col("canon").alias("p_canon"),
+                    F.col("priority").alias("p_priority"),
+                    F.col("depth").alias("p_depth"),
                 ),
-                on="url",
-                how="inner",
+                batch_n, bids, "html",
             )
             .select(
                 F.col("p_canon"), F.col("url").alias("p_ser"),
@@ -505,9 +556,12 @@ class Engine:
                 else []
             ),
         )
+        return hits, fetched
 
-        # --- single explode over (kind, pos, href) structs, then the fused
-        # resolve/validate/canonicalize UDF (one Arrow crossing per link) ---
+    def _resolve_dedup(self, hits: DataFrame) -> DataFrame:
+        """Resolve+dedup layer: a single explode over (kind, pos, href)
+        structs, the fused resolve/validate/canonicalize UDF (one Arrow
+        crossing per link), then first-observer dedup per canon."""
         link_structs = F.transform(
             "pg.link_links",
             lambda x, i: F.struct(
@@ -549,20 +603,17 @@ class Engine:
         # unique per parent, (kind, pos) unique within a parent.
         payload = [c for c in cand.columns if c != "canon"]
         order = F.struct(F.col("p_priority"), F.col("kind"), F.col("pos"))
-        cand = (
+        return (
             cand.groupBy("canon")
             .agg(F.min_by(F.struct(*payload), order).alias("__w"))
             .select("canon", *[F.col(f"__w.{c}").alias(c) for c in payload])
         )
 
-        # --- seen filter: bloom prefilter + exact anti-join (J2) ---
-        seen_df = self.catalog.read("seen")
-        unseen = filter_unseen(
-            cand, seen_df, self.bloom,
-            sha1_col="sha1", cand_key="canon", seen_key="url",
-        )
-
-        # --- completed filter (J3): observable on fresh-seen resume runs ---
+    def _judge(self, cand: DataFrame, ops: DataFrame | None) -> DataFrame:
+        """Judge layer: seen filter (J2), completed filter (J3) and robots
+        (J4/E4). Returns the cached judged candidates."""
+        unseen = self._unseen(cand)
+        # completed filter (J3): observable on fresh-seen resume runs
         if ops is not None:
             completed = ops.filter(F.col("op") == "complete").select(
                 F.col("url").alias("c_url"), F.lit(True).alias("is_completed")
@@ -574,42 +625,41 @@ class Engine:
             )
         else:
             unseen = unseen.withColumn("is_completed", F.lit(False))
-
-        # --- robots (J4/E4), executor-side: candidates join the robots
-        # table on host and the matcher parses per host-group INSIDE the
-        # pandas UDF — no robots body ever collects to the driver (a web-
-        # scale round touches 10^6+ hosts x multi-KB bodies). Spark
-        # broadcasts the robots side only while it is small; past the
-        # threshold AQE plans a shuffle join ---
-        if self.robots_df is not None and cfg.respect_robots:
-            judged = (
-                unseen.join(
-                    self.robots_df.select("host", "robots_txt"),
-                    on="host",
-                    how="left",
-                )
-                .withColumn(
-                    "blocked",
-                    F.when(F.col("is_completed"), F.lit(False)).otherwise(
-                        self._blocked_join(
-                            F.col("ser"), F.col("host"), F.col("robots_txt")
-                        )
-                    ),
-                )
-                .drop("robots_txt")
-                .cache()
+        # robots (J4/E4), executor-side: candidates join the robots table
+        # on host and the matcher parses per host-group INSIDE the pandas
+        # UDF — no robots body ever collects to the driver (a web-scale
+        # round touches 10^6+ hosts x multi-KB bodies). Spark broadcasts
+        # the robots side only while it is small; past the threshold AQE
+        # plans a shuffle join
+        if self.robots_df is None or not self.cfg.respect_robots:
+            return unseen.withColumn("blocked", F.lit(False)).cache()
+        return (
+            unseen.join(
+                self.robots_df.select("host", "robots_txt"),
+                on="host",
+                how="left",
             )
-        else:
-            judged = unseen.withColumn("blocked", F.lit(False)).cache()
+            .withColumn(
+                "blocked",
+                F.when(F.col("is_completed"), F.lit(False)).otherwise(
+                    self._blocked_join(
+                        F.col("ser"), F.col("host"), F.col("robots_txt")
+                    )
+                ),
+            )
+            .drop("robots_txt")
+            .cache()
+        )
 
-        # ONE job runs the whole fetch/extract/judge pipeline AND returns
-        # every per-round scalar and per-partition lineage stat: a union of
-        # per-partition aggregates over `judged` (extract stage) and `hits`
-        # (fetch stage). Materializing the judged branch fills BOTH caches
-        # (judged's plan passes through the hits cache node), so the
-        # concurrent table writes below read cached data. This replaces the
-        # former judged.count() + two stats collects + seed-requeue collect
-        # — four jobs folded into one.
+    def _round_stats(self, judged: DataFrame, hits: DataFrame) -> dict:
+        """Stats layer: ONE job runs the whole fetch/extract/judge pipeline
+        AND returns every per-round scalar and per-partition lineage stat:
+        a union of per-partition aggregates over `judged` (extract stage)
+        and `hits` (fetch stage). Materializing the judged branch fills
+        BOTH caches (judged's plan passes through the hits cache node), so
+        the concurrent table writes of the publish layer read cached
+        data."""
+        cfg = self.cfg
         child_ok = (
             (F.col("kind") == 0) & ~F.col("blocked") & ~F.col("is_completed")
         )
@@ -650,12 +700,7 @@ class Engine:
         if need_img_buckets:
             agg_exprs.append(
                 F.collect_set(
-                    F.when(
-                        img_ok,
-                        F.pmod(
-                            F.xxhash64("ser"), F.lit(self.pages_buckets)
-                        ).cast("int"),
-                    )
+                    F.when(img_ok, pages_bucket("ser", self.pages_buckets))
                 ).alias("img_buckets")
             )
         jstats = (
@@ -673,33 +718,42 @@ class Engine:
         ).collect()
         part_stats = [row for row in stat_rows if row["stage"] == "extract"]
         fetch_parts = [row for row in stat_rows if row["stage"] == "fetch"]
-
-        def _tot(rows, col):
-            return int(sum((row[col] or 0) for row in rows))
-
         stats = {
-            c: _tot(part_stats, c)
+            c: int(sum((row[c] or 0) for row in part_stats))
             for c in ("cand_n", "blocked_n", "completed_dropped_n",
                       "child_n", "img_n")
         }
-        fetched_n = _tot(fetch_parts, "fetched_n")
-        requeued: set[str] = set()
-        if self._all_seed_canons:
-            for row in part_stats:
-                requeued.update(row["seed_canons"] or [])
-        img_bids = None
-        if need_img_buckets:
-            img_bids = sorted(
-                {int(b) for row in part_stats for b in (row["img_buckets"] or [])}
-            )
-        t_judged = time.monotonic()
-
-        # --- seen deltas: every observed survivor enters seen (Q6) ---
-        new_seen = judged.select(
-            F.col("canon").alias("url"), F.col("sha1"), F.lit(r).alias("round")
+        stats["fetched_n"] = int(
+            sum((row["fetched_n"] or 0) for row in fetch_parts)
         )
+        stats["part_stats"] = part_stats
+        stats["fetch_parts"] = fetch_parts
+        stats["requeued"] = {
+            c for row in part_stats for c in (row["seed_canons"] or [])
+        } if self._all_seed_canons else set()
+        stats["img_bids"] = sorted(
+            {int(b) for row in part_stats for b in (row["img_buckets"] or [])}
+        ) if need_img_buckets else None
+        return stats
 
-        # --- blocked rows (S10): visited rows that were never fetched ---
+    def _emit(self, r, batch, judged, fetched, stats, queued_now):
+        """Emit layer: this round's table writes as (table, rows) pairs —
+        visit + block rows, fetched pages, images, next-frontier rows and
+        completion edges. Drain rounds skip empty-side writes entirely (a
+        round with no images launches no images job). Returns the writes
+        and the queued-seed set after this round."""
+        cfg = self.cfg
+        # visit rows (upsert log): the DFS priority string IS the
+        # within-round order key, so no global row_number sort is needed;
+        # written together with this round's block rows in one delta
+        visits = batch.select(
+            F.col("canon").alias("url"),
+            F.col("referrer"),
+            F.lit(r).alias("round"),
+            F.col("priority"),
+            F.lit("visit").alias("op"),
+        )
+        # blocked rows (S10): visited rows that were never fetched
         blocked = judged.filter(F.col("blocked") & ~F.col("is_completed"))
         block_ops = blocked.select(
             F.col("canon").alias("url"),
@@ -713,73 +767,12 @@ class Engine:
             ).alias("priority"),
             F.lit("block").alias("op"),
         )
+        writes = [("visited_ops", visits.unionByName(block_ops))]
+        if stats["fetched_n"] > 0:
+            writes.append(("fetched", fetched))
 
         allowed = judged.filter(~F.col("blocked") & ~F.col("is_completed"))
-
-        # --- images (S2/S8/F5): the image fetch joins the assets table;
-        # success requires an asset row whose Content-Type starts with
-        # 'image/' (reference src/http.rs:70-76) and the BLOB is stored
-        # (src/sqlite.rs:33-39). Without an assets table, fall back to
-        # presence-in-pages metadata-only semantics ---
-        img_rows = None
-        if cfg.collect_images:
-            img_rows = allowed.filter(F.col("kind") == 1).select(
-                F.col("p_canon").alias("referrer"),
-                F.col("canon").alias("url"),
-                F.col("ser").alias("url_ser"),
-                self._image_name(F.col("ser")).alias("name"),
-                F.lit(r).alias("round"),
-            )
-            if self.assets is not None:
-                adf = self.assets.select(
-                    F.col("url").alias("url_ser"),
-                    "content_type",
-                    F.col("bytes").alias("image"),
-                )
-                img_rows = (
-                    img_rows.join(adf, "url_ser", "left")
-                    .withColumn(
-                        "success",
-                        F.coalesce(
-                            F.col("content_type").startswith("image/"),
-                            F.lit(False),
-                        ),
-                    )
-                    .withColumn(
-                        "image",
-                        F.when(F.col("success"), F.col("image")),
-                    )
-                )
-            else:
-                # presence-in-pages fallback mirrors the fetch join: prune
-                # the pages scan to the image candidates' buckets (ids rode
-                # the stats job) and size the join from the IMAGE candidate
-                # count, not the batch count
-                img_pages = self.pages
-                if img_bids is not None:
-                    img_pages = img_pages.filter(
-                        F.col("bucket").isin(img_bids)
-                    )
-                img_hit = (
-                    img_pages.select(F.col("url").alias("url_ser"))
-                    .join(
-                        self._small_side(
-                            img_rows.select("url_ser"), stats["img_n"]
-                        ),
-                        "url_ser", "inner",
-                    )
-                    .withColumn("success", F.lit(True))
-                )
-                img_rows = (
-                    img_rows.join(img_hit, "url_ser", "left")
-                    .fillna({"success": False})
-                    .withColumn(
-                        "content_type", F.lit(None).cast("string")
-                    )
-                    .withColumn("image", F.lit(None).cast("binary"))
-                )
-
-        # --- children: next frontier rows + completion edges (A4) ---
+        # children: next frontier rows + completion edges (A4)
         children = allowed.filter(F.col("kind") == 0)
         if cfg.max_depth is not None:
             children = children.filter(F.col("p_depth") + 1 <= cfg.max_depth)
@@ -800,121 +793,135 @@ class Engine:
             F.lit(r).alias("parent_round"),
             F.col("canon").alias("child"),
         )
-        # a canon already queued must not be queued twice: only SEEDS can
-        # hit this (every other frontier row is in the seen set, which the
-        # candidates were anti-joined against). The queued-seed set lives on
-        # the driver (<= |seeds| entries) and both its inputs rode earlier
-        # jobs for free: seeds visited this round came off the batch
-        # observation (queued_now), seeds re-discovered as children came off
-        # the stats aggregate (requeued) — zero dedicated jobs. requeued is
-        # computed pre-filter, which is equivalent: a canon still in
-        # queued_now is already in the set, so the union is a no-op for it.
-        if queued_now:
-            new_rows = new_rows.filter(
-                ~F.col("canon").isin(sorted(queued_now))
-            )
-        queued_after = queued_now | requeued
-
-        # --- every remaining per-round output reads only the materialized
-        # caches, so the table writes + bloom update run CONCURRENTLY
-        # (independent Spark jobs share idle task slots; the catalog stages
-        # deltas under a lock and nothing publishes until commit). The
-        # counts from the stats job let drain rounds SKIP empty-side write
-        # jobs entirely — a round with no images launches no images job ---
-        bloom_path = os.path.join(self.catalog.root, f"bloom-{r:06d}.npy")
-
-        def _bloom_task():
-            self.bloom.add_dataframe(new_seen, sha1_col="sha1")
-            self.bloom.save(bloom_path)
-
-        tasks = [
-            lambda: self.catalog.append(
-                "visited_ops", visits.unionByName(block_ops), r
-            ),
-        ]
-        if fetched_n > 0:
-            tasks.append(lambda: self.catalog.append("fetched", fetched, r))
-        wrote_bloom = False
-        if stats["cand_n"] > 0:
-            tasks.append(lambda: self.catalog.append("seen", new_seen, r))
-            tasks.append(_bloom_task)
-            wrote_bloom = True
         if stats["child_n"] > 0:
-            tasks.append(lambda: self.catalog.append("edges", edges, r))
             # frontier is adds-only: O(children) written per round; visited
             # rows are masked at read time and physically dropped by the
-            # periodic fold (never an O(frontier) rewrite per round)
-            tasks.append(lambda: self.catalog.append("frontier", new_rows, r))
-        if img_rows is not None and stats["img_n"] > 0:
-            tasks.append(lambda: self.catalog.append("images", img_rows, r))
+            # periodic fold (never an O(frontier) rewrite per round).
+            # A canon already queued must not be queued twice: only SEEDS
+            # can hit this (every other frontier row is in the seen set,
+            # which the candidates were anti-joined against). Both inputs
+            # of the driver-side queued-seed set rode earlier jobs for
+            # free: seeds visited this round came off the batch observation
+            # (queued_now), seeds re-discovered as children off the stats
+            # aggregate (requeued).
+            writes += [
+                ("edges", edges),
+                ("frontier", self._drop_queued(new_rows, queued_now)),
+            ]
+        if cfg.collect_images and stats["img_n"] > 0:
+            writes.append(("images", self._image_rows(r, allowed, stats)))
+        # requeued is computed pre-filter, which is equivalent: a canon
+        # still in queued_now is already in the set, so the union is a
+        # no-op for it
+        return writes, queued_now | stats["requeued"]
 
-        new_total = self.total_visited + batch_n
-        new_frontier_size = self.frontier_size
-        if new_frontier_size is not None:
-            # children all enter the frontier; batch rows leave it. Depth-
-            # filtered children make this an overestimate (safe: trims more).
-            new_frontier_size = max(
-                0, new_frontier_size - batch_n + stats["child_n"]
+    def _image_rows(
+        self, r: int, allowed: DataFrame, stats: dict
+    ) -> DataFrame:
+        """Images (S2/S8/F5): the image fetch joins the assets table;
+        success requires an asset row whose Content-Type starts with
+        'image/' (reference src/http.rs:70-76) and the BLOB is stored
+        (src/sqlite.rs:33-39). Without an assets table, fall back to
+        presence-in-pages metadata-only semantics."""
+        img_rows = allowed.filter(F.col("kind") == 1).select(
+            F.col("p_canon").alias("referrer"),
+            F.col("canon").alias("url"),
+            F.col("ser").alias("url_ser"),
+            self._image_name(F.col("ser")).alias("name"),
+            F.lit(r).alias("round"),
+        )
+        if self.assets is not None:
+            adf = self.assets.select(
+                F.col("url").alias("url_ser"),
+                "content_type",
+                F.col("bytes").alias("image"),
+            )
+            return (
+                img_rows.join(adf, "url_ser", "left")
+                .withColumn(
+                    "success",
+                    F.coalesce(
+                        F.col("content_type").startswith("image/"),
+                        F.lit(False),
+                    ),
+                )
+                .withColumn(
+                    "image",
+                    F.when(F.col("success"), F.col("image")),
+                )
+            )
+        # presence-in-pages fallback mirrors the fetch join: prune the
+        # pages scan to the image candidates' buckets (ids rode the stats
+        # job) and size the join from the IMAGE candidate count, not the
+        # batch count
+        img_hit = self._pages_join(
+            img_rows.select(F.col("url_ser").alias("url")),
+            stats["img_n"], stats["img_bids"],
+        ).select(F.col("url").alias("url_ser"), F.lit(True).alias("success"))
+        return (
+            img_rows.join(img_hit, "url_ser", "left")
+            .fillna({"success": False})
+            .withColumn("content_type", F.lit(None).cast("string"))
+            .withColumn("image", F.lit(None).cast("binary"))
+        )
+
+    def _publish(
+        self, rnd: int, writes, extras: dict, seen: DataFrame | None = None,
+        bloom_tag: str = "", stage_local=None,
+    ) -> None:
+        """Publish layer, shared by rounds and stream ingest: stage every
+        write of one commit, then commit them atomically at ``rnd`` with
+        ``extras``. ``seen`` rows (canon, sha1) also enter the seen set
+        and the bloom (a new snapshot the manifest points to).
+
+        Every input reads only materialized data, so the writes and the
+        bloom update run CONCURRENTLY (independent Spark jobs share idle
+        task slots; the catalog stages deltas under a lock and nothing
+        publishes until commit); ``stage_local`` runs on this thread
+        meanwhile. A failure anywhere drops ALL staged deltas (not just
+        the failing task's own), or a later commit on this Catalog would
+        publish a half-round, breaking the atomic-round invariant that
+        crash recovery relies on."""
+        tasks = [
+            lambda name=name, df=df: self.catalog.append(name, df, rnd)
+            for name, df in writes
+        ]
+        if seen is not None:
+            # every observed survivor enters seen (Q6)
+            new_seen = seen.select(
+                F.col("canon").alias("url"), "sha1", F.lit(rnd).alias("round")
+            )
+            bloom_path = os.path.join(
+                self.catalog.root, f"bloom-{rnd:06d}{bloom_tag}.npy"
             )
 
-        # Everything from here to commit() stages deltas; a failure anywhere
-        # must drop ALL staged deltas (not just the failing task's own) or a
-        # later commit on this Catalog would publish a half-round, breaking
-        # the atomic-round invariant that crash recovery relies on.
+            def _bloom_task():
+                self.bloom.add_dataframe(new_seen, sha1_col="sha1")
+                self.bloom.save(bloom_path)
+
+            tasks += [
+                lambda: self.catalog.append("seen", new_seen, rnd), _bloom_task
+            ]
+            extras = {**extras, "bloom": bloom_path}
         try:
-            with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
+            with ThreadPoolExecutor(max_workers=max(1, len(tasks))) as pool:
                 futures = [pool.submit(t) for t in tasks]
-                # metrics rows are O(partitions) driver-local data: stage
-                # them as pyarrow parquet with ZERO Spark jobs (a Spark
-                # write job for 40 rows is pure fixed floor)
-                self._stage_metrics_local(
-                    r, part_stats, fetch_parts, stats, batch_n, fetched_n,
-                    new_total, new_frontier_size, t0,
-                )
+                if stage_local is not None:
+                    stage_local()
                 for f in futures:
                     f.result()  # re-raise any failure before commit
-            self.catalog.commit(
-                r,
-                {
-                    "total_visited": new_total,
-                    "frontier_size": new_frontier_size,
-                    "queued_seeds": sorted(queued_after),
-                    # an all-miss round leaves the bloom (and its snapshot
-                    # pointer) unchanged
-                    **({"bloom": bloom_path} if wrote_bloom else {}),
-                },
-            )
+            self.catalog.commit(rnd, extras)
         except BaseException:
             self.catalog.abort()
             raise
-        finally:
-            hits.unpersist()
-            judged.unpersist()
-        # driver counters advance only after a successful commit, so a caller
-        # that catches a failed round and retries sees pre-round state
-        self.total_visited = new_total
-        self.frontier_size = new_frontier_size
-        self._queued_seeds = queued_after
-        self.phase_splits.append({
-            "round": r,
-            "select_s": round(t_batch - t0, 3),
-            "pipeline_s": round(t_judged - t_batch, 3),
-            "write_s": round(time.monotonic() - t_judged, 3),
-        })
-        self._debug_log(
-            f"round {r}: visited {batch_n}, fetched {fetched_n}, "
-            f"candidates {stats['cand_n']}, blocked {stats['blocked_n']}, "
-            f"children {stats['child_n']}, "
-            f"frontier ~{new_frontier_size}, "
-            f"{time.monotonic() - t0:.1f}s "
-            f"(select {t_batch - t0:.1f} / pipeline {t_judged - t_batch:.1f}"
-            f" / write+commit {time.monotonic() - t_judged:.1f}, "
-            f"jobs {self._job_counter() - jobs0})"
-        )
-        # keep merge-on-read cost flat: fold long delta chains periodically
-        # (the Iceberg rewrite_data_files analogue)
-        for t in ("visited_ops", "seen", "edges", "fetched", "metrics", "images"):
-            if self.catalog.delta_count(t) > 16:
+
+    def _maintain(self, r: int) -> None:
+        """Maintenance layer: keep merge-on-read cost flat by folding long
+        delta chains (the Iceberg rewrite_data_files analogue) — every
+        catalog table but the frontier, which has its own fold — then GC
+        bloom snapshots."""
+        for t in self.catalog.tables():
+            if t != "frontier" and self.catalog.delta_count(t) > 16:
                 self.catalog.compact(t, r)
         if (
             self.catalog.delta_count("frontier")
@@ -925,28 +932,52 @@ class Engine:
         # references (rounds may skip bloom writes, so "r - 2" is not safe)
         ref_bloom = self.catalog.extra("bloom")
         if ref_bloom:
-            import glob as _glob
-
-            for p in _glob.glob(
-                os.path.join(self.catalog.root, "bloom-*.npy")
-            ):
+            for p in glob.glob(os.path.join(self.catalog.root, "bloom-*.npy")):
                 if p < ref_bloom:
                     try:
                         os.remove(p)
                     except OSError:
                         pass
-        self.round = r + 1
-        return True
 
     # ------------------------------------------------------------------
-    def _small_side(self, side: DataFrame, n: int) -> DataFrame:
-        """The fetch joins' size rule: broadcast a side of at most
-        ``fetch_broadcast_limit`` rows (``n``); a larger side is the build
-        side of a shuffle-hash join (a 10^8-row side must never be
-        broadcast)."""
+    def _pages_join(
+        self, side: DataFrame, n: int, bids, *cols: str
+    ) -> DataFrame:
+        """The fetch simulation: ``side`` (keyed by ``url``, ``n`` rows)
+        inner-joins the pages table, selecting ``cols`` from pages.
+        SPJ-style bucket pruning: with a url-bucketed pages layout the scan
+        reads only the partitions in ``bids`` (<= n_buckets ids observed
+        for free on a job that already runs — O(buckets) driver state,
+        never O(rows)), so a small side reads a small fraction of the
+        100-TB table and a huge side's join runs over pruned input. Size
+        rule: a side of at most ``fetch_broadcast_limit`` rows broadcasts
+        INTO the pages scan (pages stream, no shuffle); a larger side is
+        the build side of a shuffle-hash join (a 10^8-row side must never
+        be broadcast)."""
+        pages = self.pages
+        if bids is not None:
+            pages = pages.filter(F.col("bucket").isin(bids))
         if n <= self.cfg.fetch_broadcast_limit:
-            return F.broadcast(side)
-        return side.hint("shuffle_hash")
+            side = F.broadcast(side)
+        else:
+            side = side.hint("shuffle_hash")
+        return pages.select("url", *cols).join(side, "url", "inner")
+
+    def _unseen(self, cand: DataFrame) -> DataFrame:
+        """Seen filter (J2): bloom prefilter + exact anti-join against the
+        committed seen set."""
+        return filter_unseen(
+            cand, self.catalog.read("seen"), self.bloom,
+            sha1_col="sha1", cand_key="canon", seen_key="url",
+        )
+
+    @staticmethod
+    def _drop_queued(rows: DataFrame, queued: set[str]) -> DataFrame:
+        """Drop rows whose canon is still queued as a seed (a canon must
+        never be queued twice)."""
+        if not queued:
+            return rows
+        return rows.filter(~F.col("canon").isin(sorted(queued)))
 
     def _live_frontier(self, ops: DataFrame | None) -> DataFrame | None:
         """Merge-on-read view of the adds-only frontier: a row is live iff
@@ -995,9 +1026,10 @@ class Engine:
         writes a ``candidates`` table in its OWN catalog) into the frontier
         at a round boundary. Returns the number of rows queued.
 
-        Semantics mirror the engine's own child discovery: candidates are
-        deduped on canon, anti-joined against the seen set (bloom-routed),
-        and — crucially — ALSO entered into the seen set + bloom, which
+        Semantics mirror the engine's own child discovery, through the
+        same seen filter and publish path: candidates are deduped on
+        canon, anti-joined against the seen set (bloom-routed), and —
+        crucially — ALSO entered into the seen set + bloom, which
         preserves the frontier-dedup invariant ("every frontier row except
         seeds is in seen"); a page that later links to an ingested canon is
         dropped by the normal seen anti-join instead of double-queueing.
@@ -1018,14 +1050,7 @@ class Engine:
         cand = frontier_mod.first_occurrence(
             cand, ["canon"], [F.col("discovered_batch"), F.col("url")]
         )
-        unseen = filter_unseen(
-            cand, self.catalog.read("seen"), self.bloom,
-            sha1_col="sha1", cand_key="canon", seen_key="url",
-        )
-        if self._queued_seeds:
-            unseen = unseen.filter(
-                ~F.col("canon").isin(sorted(self._queued_seeds))
-            )
+        unseen = self._drop_queued(self._unseen(cand), self._queued_seeds)
         w = Window.orderBy("discovered_batch", "canon")
         seq0 = int(self.catalog.extra("ingest_seed_seq", len(self.cfg.seeds)))
         ranked = unseen.withColumn("__rk", F.row_number().over(w) - 1)
@@ -1039,46 +1064,30 @@ class Engine:
         ).localCheckpoint()
         n = new_rows.count()
         if n == 0:
-            self.catalog.commit(
-                r - 1, {"ingested_candidates_batch": stream_mark}
+            self._publish(
+                r - 1, [], {"ingested_candidates_batch": stream_mark}
             )
             return 0
-        try:
-            self.catalog.append("frontier", new_rows, r - 1)
-            new_seen = new_rows.select(
-                F.col("canon").alias("url"), "sha1",
-                F.lit(r - 1).alias("round"),
-            )
-            self.catalog.append("seen", new_seen, r - 1)
-            bloom_path = os.path.join(
-                self.catalog.root, f"bloom-{r - 1:06d}i.npy"
-            )
-            self.bloom.add_dataframe(new_seen, sha1_col="sha1")
-            self.bloom.save(bloom_path)
-            requeued = {
-                row["canon"]
-                for row in new_rows.filter(
-                    F.col("canon").isin(sorted(self._all_seed_canons))
-                ).select("canon").collect()
-            } if self._all_seed_canons else set()
-            queued_after = self._queued_seeds | requeued
-            new_size = (
-                None if self.frontier_size is None
-                else self.frontier_size + n
-            )
-            self.catalog.commit(
-                r - 1,
-                {
-                    "ingested_candidates_batch": stream_mark,
-                    "ingest_seed_seq": seq0 + n,
-                    "frontier_size": new_size,
-                    "bloom": bloom_path,
-                    "queued_seeds": sorted(queued_after),
-                },
-            )
-        except BaseException:
-            self.catalog.abort()
-            raise
+        requeued = {
+            row["canon"]
+            for row in new_rows.filter(
+                F.col("canon").isin(sorted(self._all_seed_canons))
+            ).select("canon").collect()
+        } if self._all_seed_canons else set()
+        queued_after = self._queued_seeds | requeued
+        new_size = (
+            None if self.frontier_size is None else self.frontier_size + n
+        )
+        self._publish(
+            r - 1, [("frontier", new_rows)],
+            {
+                "ingested_candidates_batch": stream_mark,
+                "ingest_seed_seq": seq0 + n,
+                "frontier_size": new_size,
+                "queued_seeds": sorted(queued_after),
+            },
+            seen=new_rows, bloom_tag="i",
+        )
         self.frontier_size = new_size
         self._queued_seeds = queued_after
         self._debug_log(f"ingested {n} streamed candidates as new roots")

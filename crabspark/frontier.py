@@ -70,12 +70,15 @@ def child_priority(parent_priority, child_rank):
     )
 
 
+# salt fan-out of the politeness rank's first phase (host-skew mitigation)
+_SALT_BUCKETS = 8
+
+
 def select_batch(
     frontier: DataFrame,
     remaining_cap: int | None,
     scheduling: str,
     per_host_quota: int | None,
-    salt_buckets: int = 1,
 ) -> DataFrame:
     """Pick this round's visit batch from the frontier.
 
@@ -89,22 +92,21 @@ def select_batch(
     the trim (the engine passes None whenever the cap cannot bind this
     round, avoiding a pointless global sort of the frontier).
 
-    Host skew: with ``salt_buckets > 1`` the rank runs in two phases —
-    top-quota within (host, salt) first, then exact top-quota per host over
-    the <= quota*salt survivors — so a mega-host's frontier rows never
-    funnel through a single window partition (north-rule salting)."""
+    Host skew: the rank runs in two phases — top-quota within (host, salt)
+    first, then exact top-quota per host over the <= quota*salt survivors —
+    so a mega-host's frontier rows never funnel through a single window
+    partition (north-rule salting)."""
     if scheduling == "dfs-parity":
         return frontier.orderBy("priority").limit(1)
     out = frontier
     if per_host_quota:
-        if salt_buckets and salt_buckets > 1:
-            salt = F.pmod(F.xxhash64("canon"), F.lit(salt_buckets))
-            w1 = Window.partitionBy("host", salt).orderBy("priority")
-            out = (
-                out.withColumn("__r1", F.row_number().over(w1))
-                .filter(F.col("__r1") <= per_host_quota)
-                .drop("__r1")
-            )
+        salt = F.pmod(F.xxhash64("canon"), F.lit(_SALT_BUCKETS))
+        w1 = Window.partitionBy("host", salt).orderBy("priority")
+        out = (
+            out.withColumn("__r1", F.row_number().over(w1))
+            .filter(F.col("__r1") <= per_host_quota)
+            .drop("__r1")
+        )
         w_host = Window.partitionBy("host").orderBy("priority")
         out = (
             out.withColumn("__hr", F.row_number().over(w_host))
@@ -123,7 +125,7 @@ _RANGED_TRIM_MIN = 10_000
 
 
 # Materialized intermediates whose lifetime outlives top_k_by_priority: the
-# caller (Engine._round) unpersists them via release_temps() once the batch
+# engine's select layer unpersists them via release_temps() once the batch
 # itself is materialized, so ranged-trim blocks never accumulate across a
 # long cap-bound crawl waiting on the ContextCleaner.
 _TEMP_HANDLES: list[DataFrame] = []

@@ -28,6 +28,26 @@ import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+
+def _chain_start(deltas: list[dict]) -> int:
+    """Index where a table's live delta chain starts: its last overwrite
+    (0 when it has none) — every earlier delta is superseded."""
+    start = 0
+    for i, d in enumerate(deltas):
+        if d["mode"] == "overwrite":
+            start = i
+    return start
+
+
+def _remove(path: str) -> None:
+    """Delete a delta: a Spark-written directory or an ``append_local``
+    file."""
+    if os.path.isdir(path):
+        shutil.rmtree(path, ignore_errors=True)
+    elif os.path.exists(path):
+        os.remove(path)
 
 
 class Catalog:
@@ -104,26 +124,31 @@ class Catalog:
         os.replace(tmp, self._manifest_path)  # atomic on POSIX
 
     # --- writes (staged until commit) ---
-    def _write_delta(self, name: str, df: DataFrame, mode: str, rnd: int) -> None:
+    def _stage(
+        self, name: str, mode: str, rnd: int, write, kind: str = "delta",
+        ext: str = "",
+    ) -> None:
+        """Reserve the table's next delta slot, then ``write(path)`` into
+        it. The slot is reserved before the (slow) write so concurrent
+        writers to the same table never collide on a path, and released
+        if the write fails."""
         with self._lock:
             tbl = self.state["tables"].setdefault(name, {"deltas": []})
             seq = len(tbl["deltas"]) + sum(
                 1 for n, _ in self._pending if n == name
             )
-            rel = f"{name}/delta-{rnd:06d}-{seq:06d}"
-            # reserve the slot before the (slow) write so concurrent writers
-            # to the same table never collide on a path
+            rel = f"{name}/{kind}-{rnd:06d}-{seq:06d}{ext}"
             entry = (name, {"path": rel, "mode": mode, "round": rnd})
             self._pending.append(entry)
         try:
-            df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
+            write(os.path.join(self.root, rel))
         except Exception:
             with self._lock:
                 self._pending.remove(entry)
             raise
 
     def append(self, name: str, df: DataFrame, rnd: int) -> None:
-        self._write_delta(name, df, "append", rnd)
+        self._stage(name, "append", rnd, df.write.mode("overwrite").parquet)
 
     def append_local(self, name: str, table, rnd: int) -> None:
         """Stage a driver-local pyarrow Table as a delta WITHOUT a Spark
@@ -133,26 +158,15 @@ class Catalog:
         resulting file alongside directory deltas transparently."""
         import pyarrow.parquet as pq
 
-        with self._lock:
-            tbl = self.state["tables"].setdefault(name, {"deltas": []})
-            seq = len(tbl["deltas"]) + sum(
-                1 for n, _ in self._pending if n == name
-            )
-            rel = f"{name}/local-{rnd:06d}-{seq:06d}.parquet"
-            entry = (name, {"path": rel, "mode": "append", "round": rnd})
-            self._pending.append(entry)
-        try:
-            path = os.path.join(self.root, rel)
+        def _write(path: str) -> None:
             os.makedirs(os.path.dirname(path), exist_ok=True)
             pq.write_table(table, path)
-        except Exception:
-            with self._lock:
-                self._pending.remove(entry)
-            raise
+
+        self._stage(name, "append", rnd, _write, kind="local", ext=".parquet")
 
     def overwrite(self, name: str, df: DataFrame, rnd: int) -> None:
         """Logical overwrite: later reads see only deltas from this one on."""
-        self._write_delta(name, df, "overwrite", rnd)
+        self._stage(name, "overwrite", rnd, df.write.mode("overwrite").parquet)
 
     def commit(self, rnd: int, extras: dict | None = None) -> None:
         """Atomically publish every delta staged since the last commit.
@@ -194,18 +208,14 @@ class Catalog:
             if not tbl:
                 return
             deltas = tbl["deltas"]
-            last_ow = 0
-            for i, d in enumerate(deltas):
-                if d["mode"] == "overwrite":
-                    last_ow = i
-            dead, live = deltas[:last_ow], deltas[last_ow:]
+            start = _chain_start(deltas)
+            dead, live = deltas[:start], deltas[start:]
             if not dead:
                 return
             tbl["deltas"] = live
             self._persist()
         for d in dead:
-            p = os.path.join(self.root, d["path"])
-            shutil.rmtree(p, ignore_errors=True)
+            _remove(os.path.join(self.root, d["path"]))
 
     def abort(self) -> None:
         """Drop staged deltas (their files become unreferenced garbage,
@@ -215,26 +225,31 @@ class Catalog:
             self._pending.clear()
 
     # --- reads (committed state only) ---
-    def _delta_paths(self, name: str) -> list[str]:
-        tbl = self.state["tables"].get(name)
-        if not tbl or not tbl["deltas"]:
-            return []
-        deltas = tbl["deltas"]
-        start = 0
-        for i, d in enumerate(deltas):
-            if d["mode"] == "overwrite":
-                start = i
-        return [os.path.join(self.root, d["path"]) for d in deltas[start:]]
+    def _deltas(self, name: str) -> list[dict]:
+        return self.state["tables"].get(name, {}).get("deltas", [])
+
+    def _delta_paths(self, name: str, upto: int | None = None) -> list[str]:
+        """Paths of the table's live chain, optionally as of round
+        ``upto`` (the overwrite rule then applies within that horizon)."""
+        deltas = [
+            d for d in self._deltas(name) if upto is None or d["round"] <= upto
+        ]
+        return [
+            os.path.join(self.root, d["path"])
+            for d in deltas[_chain_start(deltas):]
+        ]
+
+    def tables(self) -> list[str]:
+        """Names of every table the catalog has staged or committed."""
+        return list(self.state["tables"])
 
     def exists(self, name: str) -> bool:
-        return bool(self._delta_paths(name))
+        return bool(self._deltas(name))
 
     def read(self, name: str) -> DataFrame | None:
         """Union of committed deltas (one multi-path parquet scan)."""
         paths = self._delta_paths(name)
-        if not paths:
-            return None
-        return self.spark.read.parquet(*paths)
+        return self.spark.read.parquet(*paths) if paths else None
 
     def read_at(self, name: str, rnd: int) -> DataFrame | None:
         """Time travel (Iceberg `VERSION AS OF` analogue): the table as of
@@ -248,18 +263,8 @@ class Catalog:
         (expire_snapshots + rewrite_data_files in one step), so rounds
         older than the last rewrite are no longer reachable — ``None`` is
         returned, never a partial reconstruction."""
-        tbl = self.state["tables"].get(name)
-        if not tbl:
-            return None
-        deltas = [d for d in tbl["deltas"] if d["round"] <= rnd]
-        if not deltas:
-            return None
-        start = 0
-        for i, d in enumerate(deltas):
-            if d["mode"] == "overwrite":
-                start = i
-        paths = [os.path.join(self.root, d["path"]) for d in deltas[start:]]
-        return self.spark.read.parquet(*paths)
+        paths = self._delta_paths(name, rnd)
+        return self.spark.read.parquet(*paths) if paths else None
 
     def compact(self, name: str, rnd: int) -> None:
         """Rewrite a table's delta chain as one delta (Iceberg rewrite_data_files
@@ -274,27 +279,18 @@ class Catalog:
         tbl["deltas"] = [{"path": rel, "mode": "overwrite", "round": rnd}]
         self._persist()
         for d in old:
-            p = os.path.join(self.root, d["path"])
-            if os.path.exists(p):
-                shutil.rmtree(p, ignore_errors=True)
+            _remove(os.path.join(self.root, d["path"]))
 
     def delta_count(self, name: str) -> int:
-        return len(self.state["tables"].get(name, {}).get("deltas", []))
+        return len(self._deltas(name))
 
     def snapshots(self, name: str) -> list[int]:
         """Committed rounds reachable by ``read_at`` for this table (the
         Iceberg snapshot-log analogue): distinct delta rounds at or after
         the chain's last overwrite, ascending. Empty when the table does
         not exist."""
-        tbl = self.state["tables"].get(name)
-        if not tbl or not tbl["deltas"]:
-            return []
-        deltas = tbl["deltas"]
-        start = 0
-        for i, d in enumerate(deltas):
-            if d["mode"] == "overwrite":
-                start = i
-        return sorted({d["round"] for d in deltas[start:]})
+        deltas = self._deltas(name)
+        return sorted({d["round"] for d in deltas[_chain_start(deltas):]})
 
     @property
     def committed_round(self) -> int:
@@ -302,6 +298,25 @@ class Catalog:
 
     def extra(self, key: str, default=None):
         return self.state["extras"].get(key, default)
+
+
+# marker file of the url-bucketed pages layout, holding its bucket count
+_BUCKETS_FILE = "_crabspark_buckets.json"
+
+
+def pages_bucket(url_col: str, n_buckets: int):
+    """Bucket id of a url column in the bucketed pages layout."""
+    return F.pmod(F.xxhash64(url_col), F.lit(n_buckets)).cast("int")
+
+
+def pages_bucket_count(pages_path: str) -> int | None:
+    """Bucket count of a ``bucketize_pages`` snapshot; None when the
+    snapshot is not bucketed."""
+    try:
+        with open(os.path.join(pages_path, _BUCKETS_FILE)) as f:
+            return int(json.load(f)["n_buckets"])
+    except (OSError, ValueError, KeyError, TypeError):
+        return None
 
 
 def bucketize_pages(
@@ -315,18 +330,13 @@ def bucketize_pages(
     pages table instead of all of it, and a huge batch's shuffle-hash
     join runs over pruned input. The Iceberg/SPJ analogue without a
     bucketing metastore: partition pruning does the work."""
-    from pyspark.sql import functions as F
-
     df = spark.read.parquet(src_path)
     (
-        df.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"),
-        )
+        df.withColumn("bucket", pages_bucket("url", n_buckets))
         .repartition(n_buckets, "bucket")
         .write.partitionBy("bucket")
         .mode("overwrite")
         .parquet(dest_path)
     )
-    with open(os.path.join(dest_path, "_crabspark_buckets.json"), "w") as f:
+    with open(os.path.join(dest_path, _BUCKETS_FILE), "w") as f:
         json.dump({"n_buckets": int(n_buckets)}, f)

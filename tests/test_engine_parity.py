@@ -167,6 +167,80 @@ def test_resume_equals_uninterrupted(spark, fixture_paths, tmp_path, tp_engine, 
     }
 
 
+def test_crash_in_round_resumes_to_uninterrupted(
+    spark, fixture_paths, tmp_path, tp_engine
+):
+    """A crash INSIDE a round: Catalog.commit raises in round k after
+    that round's emit writes have landed. The manifest stays at round
+    k-1, and a new Engine on the workdir finishes with the uninterrupted
+    crawl's visited set, flags, seen set and per-URL text."""
+    import os
+
+    from crabspark.tables import Catalog
+
+    k = 1
+    cfg = make_cfg(scheduling="throughput", per_host_quota=4)
+    work = str(tmp_path / "crash_work")
+    eng1 = new_engine(spark, fixture_paths, work, cfg)
+    commit = eng1.catalog.commit
+
+    def crashing_commit(rnd, extras=None):
+        if rnd == k:
+            staged = dict(eng1.catalog._pending)
+            assert {"visited_ops", "metrics", "metrics_partitions"} <= set(
+                staged
+            )
+            for delta in staged.values():
+                assert os.path.exists(os.path.join(work, delta["path"]))
+            raise RuntimeError("crash inside round commit")
+        commit(rnd, extras)
+
+    eng1.catalog.commit = crashing_commit
+    with pytest.raises(RuntimeError, match="crash inside round commit"):
+        eng1.run()
+    assert Catalog(work, None).committed_round == k - 1
+
+    eng2 = new_engine(spark, fixture_paths, work, cfg)  # new process
+    assert eng2.round == k
+    eng2.run()
+    vis = {
+        r["url"]: (r["is_blocked"], r["is_complete"])
+        for r in eng2.read_visited().collect()
+    }
+    want = {
+        r["url"]: (r["is_blocked"], r["is_complete"])
+        for r in tp_engine.read_visited().collect()
+    }
+    assert vis == want
+    assert {r["url"] for r in eng2.read_seen().collect()} == {
+        r["url"] for r in tp_engine.read_seen().collect()
+    }
+
+    def texts(eng):
+        fetched = eng.catalog.read("fetched").select("url", "text")
+        return {r["url"]: r["text"] for r in fetched.collect()}
+
+    assert texts(eng2) == texts(tp_engine)
+
+
+def test_maintenance_compacts_metrics_partitions(dfs_engine):
+    """Maintenance compacts every catalog table but the frontier: the
+    one-URL-per-round dfs crawl runs more than 16 rounds, so its
+    per-round metrics_partitions deltas fold into one compacted delta
+    that keeps every round's rows (a round that fetched nothing has
+    none)."""
+    cat = dfs_engine.catalog
+    metrics = cat.read("metrics").collect()
+    assert len(metrics) > 16
+    deltas = cat.state["tables"]["metrics_partitions"]["deltas"]
+    assert deltas[0]["mode"] == "overwrite"
+    assert len(deltas) == len(metrics) - 16
+    got = cat.read("metrics_partitions").select("round").distinct()
+    assert {r["round"] for r in got.collect()} == {
+        m["round"] for m in metrics if m["fetched_n"] > 0
+    }
+
+
 def test_time_travel_reproduces_round_states(tp_engine):
     """Iceberg-style snapshot reads against a REAL crawl: read_at at each
     committed round must reproduce exactly the cumulative state a reader

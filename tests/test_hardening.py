@@ -50,6 +50,7 @@ def test_config_file_with_removed_keys_loads_defaults(tmp_path):
         "frontier_auto_bucket_threshold": 10,
         "seen_filter": "cuckoo",
         "fetch_join": "shuffle",
+        "salt_buckets": 4,
         "max_urls_to_visit": 7,
     }))
     cfg = Config.new(str(p))

@@ -49,16 +49,30 @@ def test_abort_drops_staged(spark, tmp_path):
 
 
 def test_compaction_preserves_content(spark, tmp_path):
+    """Compaction folds Spark-written and driver-local (append_local)
+    deltas into one and deletes every file it replaced."""
+    import os
+
+    import pyarrow as pa
+
     cat = Catalog(str(tmp_path / "c4"), spark)
-    for r in range(5):
+    for r in range(4):
         cat.append("t", df(spark, [(f"k{r}", r)]), r)
         cat.commit(r)
+    local = pa.table({"k": ["k4"], "v": pa.array([4], pa.int32())})
+    cat.append_local("t", local, 4)
+    cat.commit(4)
     assert cat.delta_count("t") == 5
+    old = [
+        os.path.join(cat.root, d["path"])
+        for d in cat.state["tables"]["t"]["deltas"]
+    ]
     cat.compact("t", 5)
     assert cat.delta_count("t") == 1
     assert {row["k"] for row in cat.read("t").collect()} == {
         "k0", "k1", "k2", "k3", "k4"
     }
+    assert not any(os.path.exists(p) for p in old)
 
 
 def test_extras_roundtrip(spark, tmp_path):
