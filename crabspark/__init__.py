@@ -19,6 +19,17 @@ tables    snapshot/delta table layer (Iceberg-style, parquet fallback)
 seen      sharded URL-seen set: bloom prefilter + exact anti-join
 frontier  priority encoding, per-host politeness rank, cap trim
 engine    the round loop: visit, fetch-join, extract, filter, commit
+shipping  the package zip for Python workers, and their per-process set-up
+
+Importing the package runs ``shipping.setup_worker()``: a Spark Python
+worker imports crabspark when it first unpickles a crabspark UDF, and the
+set-up (unchanged zip archives keep their import directory across tasks;
+the worker's import-time heap is frozen out of the per-task GC) then holds
+for every later task of that reused worker.
 """
 
+from crabspark import shipping as _shipping
+
 __version__ = "0.1.0"
+
+_shipping.setup_worker()

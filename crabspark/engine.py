@@ -877,11 +877,12 @@ class Engine:
         Every input reads only materialized data, so the writes and the
         bloom update run CONCURRENTLY (independent Spark jobs share idle
         task slots; the catalog stages deltas under a lock and nothing
-        publishes until commit); ``stage_local`` runs on this thread
-        meanwhile. A failure anywhere drops ALL staged deltas (not just
-        the failing task's own), or a later commit on this Catalog would
-        publish a half-round, breaking the atomic-round invariant that
-        crash recovery relies on."""
+        publishes until commit). ``stage_local`` runs once every write has
+        landed, before the commit, so the ``metrics.wall_s`` it stamps
+        covers the writes. A failure anywhere drops ALL staged deltas (not
+        just the failing task's own), or a later commit on this Catalog
+        would publish a half-round, breaking the atomic-round invariant
+        that crash recovery relies on."""
         tasks = [
             lambda name=name, df=df: self.catalog.append(name, df, rnd)
             for name, df in writes
@@ -906,10 +907,10 @@ class Engine:
         try:
             with ThreadPoolExecutor(max_workers=max(1, len(tasks))) as pool:
                 futures = [pool.submit(t) for t in tasks]
-                if stage_local is not None:
-                    stage_local()
                 for f in futures:
                     f.result()  # re-raise any failure before commit
+            if stage_local is not None:
+                stage_local()
             self.catalog.commit(rnd, extras)
         except BaseException:
             self.catalog.abort()

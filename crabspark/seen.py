@@ -7,8 +7,9 @@ Design for a 10^10-URL frontier (north rule):
   ``(url, url_sha1, first_seen_round)``), hash-distributed by ``url_sha1``
   across partitions — nothing driver-resident grows with the frontier.
   Candidate filtering is a LEFT ANTI join on ``url`` (J2 in SURVEY.md §2.3).
-- **Bloom prefilter**: per-partition bitmaps are built distributed
-  (``mapInPandas`` over each round's seen-delta), OR-reduced, and broadcast.
+- **Bloom prefilter**: per-partition deltas are built distributed
+  (``mapInPandas`` over each round's seen-delta: a bitmap, or the bit
+  positions of a sparse partition), OR-reduced, and broadcast.
   Candidates that miss the bloom are *definitely new* and skip the anti-join
   shuffle; only bloom-positives (seen + false positives) take the exact
   path. No false drops: the bloom only routes, never rejects.
@@ -89,6 +90,32 @@ def _scatter_bits(bits: np.ndarray, pos: np.ndarray, m: int) -> None:
     np.bitwise_or(bits, np.packbits(flags, bitorder="little"), out=bits)
 
 
+def _partition_delta(batches, sha1_col: str, m: int, k: int):
+    """One partition's bloom delta as a one-row frame: its int64 bit
+    positions while they take fewer bytes than a bitmap (rows * k * 8 <
+    m/8 — a drain round's few hundred URLs against a 1.2 MB bitmap), else
+    the m/8-byte bitmap. An empty partition yields nothing."""
+    sparse, n, bits = [], 0, None
+    for pdf in batches:
+        arr = pdf[sha1_col].dropna().to_numpy()
+        if not len(arr):
+            continue
+        pos = _positions(arr, m, k).ravel()
+        if bits is None:
+            sparse.append(pos)
+            n += len(pos)
+            if n * 8 < m // 8:
+                continue
+            bits = np.zeros(m // 8, dtype=np.uint8)
+            pos = np.concatenate(sparse)
+        _scatter_bits(bits, pos, m)
+    if bits is not None:
+        yield pd.DataFrame({"bitmap": [bits.tobytes()], "positions": [None]})
+    elif sparse:
+        pos = np.concatenate(sparse).astype("<i8", copy=False)
+        yield pd.DataFrame({"bitmap": [None], "positions": [pos.tobytes()]})
+
+
 class Bloom:
     def __init__(self, capacity: int, fpp: float, bits: np.ndarray | None = None):
         self.m, self.k = _params(capacity, fpp)
@@ -110,31 +137,32 @@ class Bloom:
     def or_bitmap(self, other_bits: bytes) -> None:
         self.bits |= np.frombuffer(other_bits, dtype=np.uint8)
 
+    def merge_deltas(self, rows) -> None:
+        """OR in ``(bitmap, positions)`` partition deltas (see
+        ``_partition_delta``); all position deltas scatter in one pass."""
+        sparse = []
+        for bitmap, positions in rows:
+            if bitmap is not None:
+                self.or_bitmap(bitmap)
+            else:
+                sparse.append(np.frombuffer(positions, dtype="<i8"))
+        if sparse:
+            _scatter_bits(self.bits, np.concatenate(sparse), self.m)
+
     # --- distributed construction ---
     def add_dataframe(self, df: DataFrame, sha1_col: str = "url_sha1") -> None:
-        """Build per-partition bitmaps executor-side, OR them on the driver.
-        Each partition ships m/8 bytes — O(partitions), not O(rows)."""
+        """Build per-partition deltas executor-side, OR them on the driver.
+        Each partition ships at most m/8 bytes — O(partitions), not O(rows)."""
         m, k = self.m, self.k
-
-        def build(it):
-            bits = np.zeros(m // 8, dtype=np.uint8)
-            any_rows = False
-            for pdf in it:
-                arr = pdf[sha1_col].dropna().to_numpy()
-                if len(arr):
-                    any_rows = True
-                    pos = _positions(arr, m, k).ravel()
-                    _scatter_bits(bits, pos, m)
-            if any_rows:
-                yield pd.DataFrame({"bitmap": [bits.tobytes()]})
-
         rows = (
             df.select(sha1_col)
-            .mapInPandas(build, schema="bitmap binary")
+            .mapInPandas(
+                lambda it: _partition_delta(it, sha1_col, m, k),
+                schema="bitmap binary, positions binary",
+            )
             .collect()
         )
-        for r in rows:
-            self.or_bitmap(r["bitmap"])
+        self.merge_deltas(rows)
 
     # --- persistence (resume support) ---
     def save(self, path: str) -> None:

@@ -146,6 +146,31 @@ def test_metrics_recorded(tp_engine):
     assert all(r["batch_n"] > 0 for r in rows)
 
 
+def test_metrics_wall_s_covers_publish_writes(spark, fixture_paths, tmp_path):
+    """metrics.wall_s is stamped after the round's writes have landed
+    (still before the commit): with every Catalog.append slowed by a
+    known delay, the round's wall_s covers select + pipeline + the delay,
+    and stays within the round's measured phases."""
+    import time
+
+    delay = 2.0
+    cfg = make_cfg(scheduling="throughput", per_host_quota=4)
+    eng = new_engine(spark, fixture_paths, str(tmp_path / "wall"), cfg)
+    append = eng.catalog.append
+
+    def slow_append(*args, **kwargs):
+        time.sleep(delay)
+        return append(*args, **kwargs)
+
+    eng.catalog.append = slow_append
+    eng.run(max_rounds=1)
+    [row] = eng.catalog.read("metrics").collect()
+    [ph] = eng.phase_splits
+    before_publish = ph["select_s"] + ph["pipeline_s"]
+    assert before_publish + delay <= row["wall_s"]
+    assert row["wall_s"] <= before_publish + ph["write_s"] + 0.01
+
+
 # --- kill-and-resume ---
 
 def test_resume_equals_uninterrupted(spark, fixture_paths, tmp_path, tp_engine, golden_full):

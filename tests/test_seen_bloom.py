@@ -109,3 +109,38 @@ def test_scatter_hybrid_paths_bit_identical():
         chunked.add_array(chunk)
     assert (whole.bits == chunked.bits).all()
     assert whole.might_contain(pd.Series(keys[:1000])).all()
+
+
+def test_partition_deltas_positions_bitmap_and_mix_identical():
+    """A partition ships its int64 bit positions while rows * k * 8 bytes
+    stay below the m/8-byte bitmap, else the bitmap (switching mid-
+    partition once its positions outgrow it). Positions only, bitmaps
+    only and a mix leave byte-identical bits."""
+    from crabspark.seen import _partition_delta
+
+    def merged(parts):
+        b = Bloom(capacity=100_000, fpp=0.01)  # m/8 = 119,816 B, k = 7
+        rows = []
+        for part in parts:  # two Arrow batches per partition
+            batches = [pd.DataFrame({"sha1": c}) for c in np.array_split(part, 2)]
+            rows += [
+                (f["bitmap"][0], f["positions"][0])
+                for f in _partition_delta(iter(batches), "sha1", b.m, b.k)
+            ]
+        b.merge_deltas(rows)
+        return b.bits.tobytes(), {
+            "positions" if bm is None else "bitmap" for bm, _ in rows
+        }
+
+    keys = sha1s(9_000)
+    want = Bloom(capacity=100_000, fpp=0.01)
+    want.add_array(keys)
+    for parts, kinds in (
+        (np.array_split(keys, 9), {"positions"}),  # 1,000 rows: 56 KB
+        (np.array_split(keys, 2), {"bitmap"}),  # 4,500 rows: 252 KB
+        # 500 rows; 2 x 1,500 rows crossing m/8 in the 2nd batch; 5,500
+        ([keys[:500], keys[500:3500], keys[3500:]], {"positions", "bitmap"}),
+    ):
+        assert merged(parts) == (want.bits.tobytes(), kinds)
+    empty = [pd.DataFrame({"sha1": pd.Series([None, None], dtype=object)})]
+    assert list(_partition_delta(iter(empty), "sha1", want.m, want.k)) == []
